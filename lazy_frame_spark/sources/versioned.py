@@ -75,6 +75,8 @@ journaled sink's assumptions (sources/parquet.py).
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import math
 import os
@@ -423,9 +425,8 @@ def _commit_keyed_with_rebase(
 #: optimized-writes trade table formats make for MERGE). Above the cap
 #: the input partitioning is kept: a large rewrite's inputs are the
 #: touched files themselves, already at target file size, and a second
-#: full shuffle of terabytes buys nothing. Parameterized for clusters.
-_REBALANCE_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_REBALANCE_MAX_MB", "16384")) * 1024 * 1024
+#: full shuffle of terabytes buys nothing. Unmeasured guess (16 GiB).
+_REBALANCE_MAX_BYTES = 16 * 1024 ** 3
 
 #: keyed-maintenance batches whose validation probe counted at most
 #: this many rows get an explicit broadcast hint on their distinct-key
@@ -435,8 +436,8 @@ _REBALANCE_MAX_BYTES = int(os.environ.get(
 #: and hoping AQE's runtime rewrite converts the join. 2M key tuples
 #: is tens of MB framed, far under the broadcast caps; bulk backfill
 #: batches above the gate keep the planner's estimate-driven choice.
-_KEYS_BCAST_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_KEYS_BCAST_MAX_ROWS", "2000000"))
+#: Unmeasured guess.
+_KEYS_BCAST_MAX_ROWS = 2_000_000
 
 
 def _local_bytes(path: str, rel_files: list[str] | set) -> int:
@@ -449,6 +450,35 @@ def _local_bytes(path: str, rel_files: list[str] | set) -> int:
         except OSError:
             pass
     return n
+
+
+def _pin(pins: contextlib.ExitStack, df: DataFrame) -> DataFrame:
+    """Persist ``df`` until ``pins`` closes — on return or on any raise,
+    so a failure surfaces its own exception and leaves nothing pinned."""
+    df = df.persist()
+    pins.callback(df.unpersist)
+    return df
+
+
+def _touched_files(spark: SparkSession, path: str, prev: dict, match,
+                   files: list[str] | None = None,
+                   pins: contextlib.ExitStack | None = None):
+    """``(touched, hits)``: the distinct origin files of the VISIBLE
+    rows ``match`` keeps (DV-applied: a tombstoned row can't mark its
+    file touched) and those rows — pinned in ``pins`` only for a caller
+    that re-reads them, else the cache build is pure overhead."""
+    hits = match(_read_snapshot(spark, path, prev, files=files,
+                                _with_position=True))
+    if pins is not None:
+        hits = _pin(pins, hits)
+    return {r[0] for r in hits.select("__file__").distinct().collect()}, hits
+
+
+def _rewrite_stats(touched, carried, new_files, **counters) -> dict:
+    """The stats record of every file-grain rewrite commit (keyed or
+    copy-on-write delete), plus the verb's own counters."""
+    return {"files_rewritten": len(touched), "files_carried": len(carried),
+            "files_written": len(new_files), **counters}
 
 
 def _write_data_dir(df: DataFrame, path: str, version: int,
@@ -1474,18 +1504,25 @@ def versioned_stream_writer(path: str, stream_id: str = "default"):
         q = (df.writeStream.foreachBatch(versioned_stream_writer(tbl))
                .option("checkpointLocation", ckpt).start())
     """
+    return _stream_sink(
+        path, stream_id, lambda batch_df, _batch_id, extra, txn:
+        append_versioned(batch_df, path, extra=extra, txn=txn))
+
+
+def _stream_sink(path: str, stream_id: str, commit):
+    """foreachBatch shell of every versioned sink: skip a replayed batch
+    (id <= the high-water mark), else ``commit(batch_df, batch_id,
+    extra, txn)`` with the id riding the commit itself. The txn
+    identifiers back the hw check under RACES: two queries sharing a
+    stream_id both pass the hw read, but the loser's rebasing commit
+    finds the winner's (app, batch) in the chain and aborts."""
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         hw = last_stream_batch(path, stream_id)
         if hw is not None and batch_id <= hw:
             return
-        # txn identifiers back the high-water check under RACES: two
-        # queries accidentally sharing a stream_id both pass the hw
-        # read, but the loser's auto-rebased append then finds the
-        # winner's (app, batch) in the chain and aborts idempotently
-        append_versioned(batch_df, path,
-                         extra={"stream_batch_id": int(batch_id),
-                                "stream_id": stream_id},
-                         txn=(f"stream:{stream_id}", int(batch_id)))
+        commit(batch_df, batch_id,
+               {"stream_batch_id": int(batch_id), "stream_id": stream_id},
+               (f"stream:{stream_id}", int(batch_id)))
 
     return _write
 
@@ -1510,10 +1547,7 @@ def versioned_stream_merger(path: str, on: str | list[str],
     re-ingesting old batches re-asserts rows already current."""
     keys = [on] if isinstance(on, str) else list(on)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        hw = last_stream_batch(path, stream_id)
-        if hw is not None and batch_id <= hw:
-            return
+    def _commit(batch_df: DataFrame, batch_id: int, extra, txn) -> None:
         if latest_version(path) is None:
             # first batch bootstraps the table (merge needs a parent) —
             # but it must honor the same keyed-upsert contract: a
@@ -1530,22 +1564,12 @@ def versioned_stream_merger(path: str, on: str | list[str],
                     f"duplicate keys on {keys} — aggregate to "
                     "latest-per-key before the sink"
                 )
-            append_versioned(batch_df, path,
-                             extra={"stream_batch_id": int(batch_id),
-                                    "stream_id": stream_id},
-                             txn=(f"stream:{stream_id}", int(batch_id)))
+            append_versioned(batch_df, path, extra=extra, txn=txn)
             return
-        # the batch id rides the merge commit itself (extra=),
-        # keeping the exactly-once mark atomic with the data; the txn
-        # identifiers back it under races (two queries sharing an id)
-        merge_versioned(
-            batch_df.sparkSession, path, batch_df, keys,
-            extra={"stream_batch_id": int(batch_id),
-                   "stream_id": stream_id},
-            txn=(f"stream:{stream_id}", int(batch_id)),
-        )
+        merge_versioned(batch_df.sparkSession, path, batch_df, keys,
+                        extra=extra, txn=txn)
 
-    return _write
+    return _stream_sink(path, stream_id, _commit)
 
 
 def delete_versioned(
@@ -1588,8 +1612,7 @@ def delete_versioned(
     if not files:
         v = _commit(path, "delete", [], prev["schema"], parent,
                     {"predicate": predicate})
-        return v, {"files_rewritten": 0, "files_carried": 0,
-                   "rows_deleted": 0}
+        return v, _rewrite_stats((), (), (), rows_deleted=0)
 
     pred = F.expr(predicate)
 
@@ -1618,22 +1641,13 @@ def delete_versioned(
                    "rows_deleted": n_del,
                    "dv_files_written": len(dv_files)}
 
-    # rewrite: exact file-grain pruning — distinct origin files of the
-    # VISIBLE matching rows (DV-applied, so a tombstoned row can't
-    # force a rewrite) are the only files needing one
-    touched = {
-        r[0]
-        for r in _read_snapshot(spark, path, prev, _with_position=True)
-        .filter(pred)
-        .select("__file__")
-        .distinct()
-        .collect()
-    }
+    # rewrite: exact file-grain pruning — the files holding visible
+    # matching rows are the only files needing one
+    touched, _ = _touched_files(spark, path, prev, lambda s: s.filter(pred))
     if not touched:
         v = _commit(path, "delete", files, prev["schema"], parent,
                     {"predicate": predicate})
-        return v, {"files_rewritten": 0, "files_carried": len(files),
-                   "rows_deleted": 0}
+        return v, _rewrite_stats((), files, (), rows_deleted=0)
 
     carried = [f for f in files if f not in touched]
     survivors = _read_snapshot(
@@ -1651,15 +1665,13 @@ def delete_versioned(
         path, "delete", carried + new_files, prev["schema"], parent,
         {"predicate": predicate},
     )
-    return v, {
-        "files_rewritten": len(touched),
-        "files_carried": len(carried),
-        # physical rows removed from the rewritten files — includes any
-        # previously tombstoned rows those files carried, since the
-        # rewrite materializes their deletion vectors as a side effect
-        "rows_deleted": (before - after)
-        if before is not None and after is not None else None,
-    }
+    # rows_deleted: physical rows removed from the rewritten files —
+    # includes any previously tombstoned rows those files carried, since
+    # the rewrite materializes their deletion vectors as a side effect
+    return v, _rewrite_stats(
+        touched, carried, new_files,
+        rows_deleted=(before - after)
+        if before is not None and after is not None else None)
 
 
 def compact_versioned(
@@ -2583,6 +2595,153 @@ def version_as_of(path: str, ts) -> int:
     return best
 
 
+def _keyed_parent(path: str, extra: dict | None, txn: tuple | None):
+    """``(parent, manifest, extra)`` with ``txn`` folded into ``extra``;
+    the manifest is None when ``txn`` is already applied (a replay, or
+    a racing twin that lost the commit): skip before any scan."""
+    parent = latest_version(path)
+    if parent is None:
+        raise FileNotFoundError(f"no versioned table at {path}")
+    if txn is not None:
+        extra = {**(extra or {}), "txn_app": txn[0],
+                 "txn_version": int(txn[1])}
+        last = last_txn_version(path, txn[0], version=parent)
+        if last is not None and last >= int(txn[1]):
+            return parent, None, extra
+    return parent, _read_manifest(path, parent), extra
+
+
+def _key_probe(per_key: DataFrame, keys: list[str], *aggs):
+    """The keyed verbs' ONE validation job: one row carrying ``aggs``,
+    ``__dup__`` (max multiplicity over fully-non-NULL keys — NULL keys
+    never match, SQL semantics, so they are never duplicates),
+    ``__rows__`` and the key bounds (min/max over the group keys ==
+    min/max over the rows)."""
+    keys_nonnull = F.col(keys[0]).isNotNull()
+    for k in keys[1:]:
+        keys_nonnull = keys_nonnull & F.col(k).isNotNull()
+    return per_key.agg(
+        *aggs,
+        F.max(F.when(keys_nonnull, F.col("__n__"))).alias("__dup__"),
+        F.sum("__n__").alias("__rows__"),
+        *filestats.key_bounds_aggs(keys)).collect()[0]
+
+
+def _dup_key(per_key: DataFrame, keys: list[str]) -> tuple:
+    """One fully-non-NULL key the batch carries more than once — the
+    failure path's extra job, so the error can name the offender."""
+    row = (per_key.dropna(subset=keys).filter(F.col("__n__") > 1)
+           .limit(1).collect()[0])
+    return tuple(row[k] for k in keys)
+
+
+def _keyed_rewrite(
+    spark: SparkSession, pins: contextlib.ExitStack, path: str,
+    parent: int, prev: dict, keys: list[str], per_key: DataFrame,
+    probe, landing: DataFrame | None, mode: str, extra: dict | None,
+    matched_only: bool = False,
+) -> tuple[int, dict]:
+    """The one commit path behind ``merge_versioned`` and ``apply_cdc``
+    after their own validation: bounds pre-cut → discovery semi-join →
+    touched-file anti-join rewrite → keyed rebasing commit. The pinned
+    ``per_key`` rollup is the distinct-key side of every join (computed
+    once, not re-aggregated for ``distinct()`` — §2.4); ``probe`` is its
+    ``_key_probe`` row; ``landing`` the rows written beside the
+    survivors (None: survivors only), cut to matched keys when
+    ``matched_only``."""
+    n_rows = int(probe["__rows__"] or 0)
+    files = list(prev["files"])
+    extra = {"merge_on": keys, "merge_mode": mode, **(extra or {})}
+    # probe_jobs (validation collects on the happy path) is pinned by
+    # tests: the one-aggregate probe contract is an assert, not prose
+    if n_rows == 0:
+        # EMPTY batch (a relay over a logical no-op chain, an idle
+        # micro-batch): commit metadata-only — extra/txn still ride it,
+        # so relay state and idempotence advance as a data commit's
+        # would — instead of a discovery scan plus an empty data-dir
+        # write. The [] footprint tells the rebase an additive winner
+        # always commutes.
+        v = _commit_keyed_with_rebase(path, "merge", parent, prev, files,
+                                      extra, [], spark=spark)
+        return v, _rewrite_stats((), files, (), files_scan_skipped=0,
+                                 rows_applied=0, probe_jobs=1)
+
+    def key_side(df: DataFrame) -> DataFrame:
+        # probe-proven small batch: broadcast the key side outright (see
+        # _KEYS_BCAST_MAX_ROWS) instead of waiting for an AQE conversion
+        return F.broadcast(df) if n_rows <= _KEYS_BCAST_MAX_ROWS else df
+
+    src_keys = key_side(per_key.select(*keys))
+    # data-skipping pre-cut for the discovery scan: a file whose
+    # commit-time key bounds don't intersect the batch's key bounds
+    # provably contains no match — skip it before the scan. On the
+    # production CDC shape (updates touch recent keys, the table is
+    # clustered or naturally ordered by them) the cold body never even
+    # enters the key-column scan. Conservative like all skipping:
+    # missing sidecars keep the file. The same footprint is the
+    # commit-time disjointness proof for rebasing over concurrent
+    # appends (_commit_keyed_with_rebase).
+    where_hint = _phys_where(_col_mapping(prev),
+                             filestats.key_bounds_from_row(probe, keys))
+    # spark handed through: a >100k-file manifest pre-cuts as a
+    # distributed job instead of a driver loop (measured 0.8 s per 100k
+    # files driver-side — DRIVER_FILES_AUDIT.json)
+    scan_files = (filestats.prune_files(path, files, where_hint, spark=spark)
+                  if files and where_hint else files)
+    touched: set[str] = set()
+    if scan_files:
+        touched, hits = _touched_files(
+            spark, path, prev,
+            lambda snap: snap.select(F.col("__file__"), *keys)
+            .join(src_keys, on=keys, how="leftsemi"),
+            files=scan_files, pins=pins if matched_only else None)
+    carried = [f for f in files if f not in touched]
+
+    parts = []
+    if touched:
+        parts.append(
+            _read_snapshot(spark, path, prev, files=sorted(touched))
+            .join(src_keys, on=keys, how="left_anti"))
+    if matched_only:
+        # only matched batch rows replace — their keys are exactly the
+        # pinned discovery result's keys (matched keys ⊆ batch keys);
+        # nothing matched, nothing lands
+        landing = (landing.join(key_side(hits.select(*keys).distinct()),
+                                on=keys, how="leftsemi")
+                   if touched else None)
+    if landing is not None:
+        # constraints gate what actually LANDS, not the whole batch — a
+        # matched-only merge may legitimately carry unmatched rows that
+        # never commit
+        _validate_constraints(
+            landing, prev.get("constraints") or {},
+            "apply_cdc" if mode == "cdc" else "merge_versioned")
+        parts.append(landing.select(
+            *[f.name for f in _committed_schema(prev).fields]))
+    new_files: list[str] = []
+    if parts:
+        new_data = functools.reduce(lambda a, b: a.unionByName(b), parts)
+        # rewrite size ≈ touched files (survivors ⊆ touched, and the
+        # replace shape re-lands roughly the touched rows — 2× margin)
+        # plus the landing rows, estimated from the probe's row total at
+        # a conservative 256 B/row so a bulk insert-only batch at scale
+        # keeps its input partitioning instead of paying a full extra
+        # shuffle
+        new_files = _write_data_dir(
+            new_data, path, parent + 1, mapping=_col_mapping(prev),
+            size_hint=2 * _local_bytes(path, touched)
+            + (256 * n_rows if landing is not None else 0))
+    # no new_files (nothing landed) leaves nothing for a concurrently
+    # added constraint to gate
+    v = _commit_keyed_with_rebase(path, "merge", parent, prev,
+                                  carried + new_files, extra, where_hint,
+                                  spark=spark, new_files=new_files)
+    return v, _rewrite_stats(
+        touched, carried, new_files,
+        files_scan_skipped=len(files) - len(scan_files),
+        rows_applied=n_rows, probe_jobs=1)
+
+
 def merge_versioned(
     spark: SparkSession,
     path: str,
@@ -2644,216 +2803,47 @@ def merge_versioned(
         raise ValueError(
             f"when_matched must be 'update' or 'delete', got {when_matched!r}"
         )
-    if merge_schema and when_matched == "update":
+    update = when_matched == "update"
+    if merge_schema and update:
         # withSchemaEvolution: additive evolution rides a separate
         # metadata-only alter BEFORE the merge — idempotent, so the
         # two-commit shape has no bad crash window (delete mode's
         # keys-only source never evolves anything)
         evolve_schema(path, source.schema.json())
-    parent = latest_version(path)
-    if parent is None:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    if txn is not None:
-        extra = {**(extra or {}), "txn_app": txn[0],
-                 "txn_version": int(txn[1])}
-        last = last_txn_version(path, txn[0], version=parent)
-        if last is not None and last >= int(txn[1]):
-            return parent, {"skipped_txn": True}
-    prev = _read_manifest(path, parent)
-    schema = _committed_schema(prev)
-    names = {f.name for f in schema.fields}
+    parent, prev, extra = _keyed_parent(path, extra, txn)
+    if prev is None:
+        return parent, {"skipped_txn": True}
+    names = {f.name for f in _committed_schema(prev).fields}
     for c in keys:
         if c not in names:
             raise ValueError(f"merge key {c!r} not in table schema")
-    # pin the batch for the merge's duration (same rationale as
-    # apply_cdc's tagged pin, and Delta materializes its MERGE source):
-    # the plan upstream of `source` — often a CDC diff or a filtered
-    # table read — otherwise re-evaluates for the validation probe, the
-    # distinct-key build, and the write. O(batch), released in finally.
-    source = source.persist()
-    try:
-        # ONE probe job, and the per-key frame it rolls up IS the
-        # distinct-key side: the duplicate-key check (NULL keys never
-        # match — SQL semantics — so two NULL-key source rows are
-        # unambiguous INSERTS and the uniqueness contract applies to
-        # fully-non-NULL keys only), the row count, the broadcast gate
-        # and the data-skipping key bounds all ride one per-key
-        # aggregate, and PERSISTING that per-key frame means the
-        # discovery semi-join and the write's anti/semi joins reuse its
-        # materialization instead of re-aggregating the source a second
-        # time for `distinct()` (same shuffle, computed once — §2.4).
-        # O(batch keys), released in finally. The failure path
-        # re-probes to name an offending key — errors may pay one
-        # extra job; the happy path never does.
-        per_key = (source.groupBy(*keys)
-                   .agg(F.count(F.lit(1)).alias("__n__")).persist())
-        if when_matched == "update":
+    with contextlib.ExitStack() as pins:
+        # pin the batch for the merge's duration (Delta materializes its
+        # MERGE source too): the plan upstream of `source` — often a CDC
+        # diff or a filtered table read — otherwise re-evaluates for the
+        # validation probe, the distinct-key build, and the write.
+        # O(batch). The per-key frame is pinned as well: the probe rolls
+        # it up AND the rewrite joins on its keys. O(batch keys). The
+        # failure path re-probes to name an offending key — errors may
+        # pay one extra job; the happy path never does.
+        source = _pin(pins, source)
+        per_key = _pin(pins, source.groupBy(*keys)
+                       .agg(F.count(F.lit(1)).alias("__n__")))
+        if update:
             _check_append_schema(source, prev["schema"])
-            keys_nonnull = F.col(keys[0]).isNotNull()
-            for k in keys[1:]:
-                keys_nonnull = keys_nonnull & F.col(k).isNotNull()
-            probe = (
-                per_key
-                .agg(F.max(F.when(keys_nonnull, F.col("__n__")))
-                     .alias("__dup__"),
-                     F.sum("__n__").alias("__rows__"),
-                     *filestats.key_bounds_aggs(keys))
-                .collect()[0]
+        probe = _key_probe(per_key, keys)
+        if update and (probe["__dup__"] or 0) > 1:
+            raise ValueError(
+                f"merge_versioned: source has duplicate keys on {keys} "
+                f"(e.g. {_dup_key(per_key, keys)}); the "
+                "replacement row would be ambiguous — dedupe the batch"
             )
-            batch_rows = int(probe["__rows__"] or 0)
-            if (probe["__dup__"] or 0) > 1:
-                dup = (
-                    per_key.dropna(subset=keys)
-                    .filter(F.col("__n__") > 1).limit(1).collect()
-                )
-                raise ValueError(
-                    f"merge_versioned: source has duplicate keys on {keys} "
-                    f"(e.g. {tuple(dup[0][k] for k in keys)}); the "
-                    "replacement row would be ambiguous — dedupe the batch"
-                )
-            bounds = filestats.key_bounds_from_row(probe, keys)
-            n_batch = batch_rows
-        else:
-            # delete mode allows duplicate keys; count + bounds over the
-            # per-key groups equal count + bounds over the rows
-            dprobe = per_key.agg(
-                F.sum("__n__").alias("__rows__"),
-                *filestats.key_bounds_aggs(keys)).collect()[0]
-            bounds = filestats.key_bounds_from_row(dprobe, keys)
-            n_batch = int(dprobe["__rows__"] or 0)
-            batch_rows = 0  # delete-mode writes survivors only (⊆ touched)
-        src_keys = per_key.select(*keys)
-        # probe-proven small batch: broadcast the key side outright (see
-        # _KEYS_BCAST_MAX_ROWS) instead of waiting for an AQE conversion
-        jkeys = (F.broadcast(src_keys)
-                 if 0 < n_batch <= _KEYS_BCAST_MAX_ROWS else src_keys)
-        try:
-
-            files = list(prev["files"])
-            # probe_jobs: driver-side VALIDATION collects the happy path
-            # ran (the dup/bounds/count rollup) — pinned by tests so the
-            # one-aggregate probe contract is an assert, not an anecdote
-            stats = {"files_rewritten": 0, "files_carried": len(files),
-                     "files_written": 0, "probe_jobs": 1}
-            touched: set[str] = set()
-            matched_keys = None  # (file, keys) of matched target rows, persisted
-            # data-skipping pre-cut for the discovery scan: a file whose
-            # commit-time key bounds don't intersect the SOURCE's key
-            # bounds provably contains no match — skip it before the scan.
-            # One tiny aggregate over the source buys this; on the
-            # production CDC shape (updates touch recent keys, the table
-            # is clustered or naturally ordered by them) the cold body
-            # never even enters the key-column scan. Conservative like all
-            # skipping: missing sidecars keep the file. The same footprint is
-            # the commit-time disjointness proof for rebasing over concurrent
-            # appends (_commit_keyed_with_rebase).
-            where_hint = _phys_where(_col_mapping(prev), bounds)
-            if files:
-                # spark handed through: a >100k-file manifest pre-cuts
-                # as a distributed job instead of a driver loop
-                # (measured 0.8 s per 100k files driver-side —
-                # DRIVER_FILES_AUDIT.json)
-                scan_files = (
-                    filestats.prune_files(path, files, where_hint,
-                                          spark=spark)
-                    if where_hint else files
-                )
-                stats["files_scan_skipped"] = len(files) - len(scan_files)
-                if scan_files:
-                    # DV-applied key scan: a tombstoned row must not mark its
-                    # file touched (nor count as a match). Persisted ONLY
-                    # when the insert_unmatched=False path will reuse it
-                    # (saving a third scan of the touched files) — on the
-                    # common paths the cache build would be pure overhead,
-                    # since only the distinct __file__ set is consumed.
-                    mscan = (
-                        _read_snapshot(spark, path, prev, files=scan_files,
-                                       _with_position=True)
-                        .select(F.col("__file__"), *keys)
-                        .join(jkeys, on=keys, how="leftsemi")
-                    )
-                    if when_matched == "update" and not insert_unmatched:
-                        matched_keys = mscan.persist()
-                        mscan = matched_keys
-                    touched = {
-                        r[0]
-                        for r in mscan.select("__file__")
-                        .distinct().collect()
-                    }
-            carried = [f for f in files if f not in touched]
-
-            parts = []
-            if touched:
-                survivors = (
-                    _read_snapshot(spark, path, prev, files=sorted(touched))
-                    .join(jkeys, on=keys, how="left_anti")
-                )
-                parts.append(survivors)
-            if when_matched == "update":
-                if insert_unmatched:
-                    to_insert = source
-                elif touched:
-                    # only matched source rows replace — their keys are
-                    # exactly the persisted discovery result's keys
-                    mk = matched_keys.select(*keys).distinct()
-                    if 0 < n_batch <= _KEYS_BCAST_MAX_ROWS:
-                        mk = F.broadcast(mk)  # matched keys ⊆ batch keys
-                    to_insert = source.join(mk, on=keys, how="leftsemi")
-                else:
-                    to_insert = None  # nothing matched, nothing to insert
-                if to_insert is not None:
-                    # constraints gate what actually LANDS (to_insert), not
-                    # the whole source — an insert_unmatched=False merge may
-                    # legitimately carry unmatched rows that never commit
-                    _validate_constraints(
-                        to_insert, prev.get("constraints") or {},
-                        "merge_versioned")
-                    parts.append(
-                        to_insert.select(*[f.name for f in schema.fields]))
-            version = parent + 1
-            commit_extra = {"merge_on": keys, "merge_mode": when_matched}
-            if extra:
-                commit_extra.update(extra)
-            try:
-                if not parts:
-                    # no new rows land — nothing for a concurrently added
-                    # constraint to gate, so no new_files handed through
-                    v = _commit_keyed_with_rebase(path, "merge", parent, prev,
-                                                  files, commit_extra,
-                                                  where_hint, spark=spark)
-                    return v, stats
-                new_data = parts[0]
-                for p in parts[1:]:
-                    new_data = new_data.unionByName(p)
-                # rewrite size ≈ touched files (survivors ⊆ touched, 2×
-                # margin for the replace rows) + the batch at a
-                # conservative 256 B/row from the probe's row total, so a
-                # bulk insert-only merge at scale keeps its input
-                # partitioning instead of paying a full extra shuffle
-                new_files = _write_data_dir(
-                    new_data, path, version, mapping=_col_mapping(prev),
-                    size_hint=2 * _local_bytes(path, touched)
-                    + 256 * batch_rows)
-            finally:
-                if matched_keys is not None:
-                    matched_keys.unpersist()
-            v = _commit_keyed_with_rebase(path, "merge", parent, prev,
-                                          carried + new_files, commit_extra,
-                                          where_hint, spark=spark,
-                                          new_files=new_files)
-            stats.update({
-                "files_rewritten": len(touched),
-                "files_carried": len(carried),
-                "files_written": len(new_files),
-            })
-            return v, stats
-        finally:
-            per_key.unpersist()
-    finally:
-        # idempotent second release: covers the probe/validation exits
-        # that raise before the inner try is entered
-        per_key.unpersist()
-        source.unpersist()
+        # delete mode allows duplicate keys and lands nothing: it writes
+        # the touched files' survivors only
+        return _keyed_rewrite(
+            spark, pins, path, parent, prev, keys, per_key, probe,
+            source if update else None, when_matched, extra,
+            matched_only=update and not insert_unmatched)
 
 
 def apply_cdc(
@@ -2896,61 +2886,34 @@ def apply_cdc(
         data_fields = [f for f in batch.schema.fields
                        if f.name != op_col]
         evolve_schema(path, T.StructType(data_fields).json())
-    parent = latest_version(path)
-    if parent is None:
-        raise FileNotFoundError(f"no versioned table at {path}")
-    if txn is not None:
-        extra = {**(extra or {}), "txn_app": txn[0],
-                 "txn_version": int(txn[1])}
-        last = last_txn_version(path, txn[0], version=parent)
-        if last is not None and last >= int(txn[1]):
-            return parent, {"skipped_txn": True}
-    prev = _read_manifest(path, parent)
-    schema = _committed_schema(prev)
+    parent, prev, extra = _keyed_parent(path, extra, txn)
+    if prev is None:
+        return parent, {"skipped_txn": True}
 
     op_norm = F.lower(F.col(op_col).cast("string"))
-    # the batch is re-read by every probe below AND by the write (anti-
-    # join + upsert projection) — pin it so the plan upstream of the
-    # tag (often a relay diff or a stream source) computes ONCE. O(batch).
-    tagged = batch.withColumn(
-        "__op__",
-        F.when(op_norm.isin("insert", "i", "update", "u"), "upsert")
-        .when(op_norm.isin("delete", "d"), "delete"),
-    ).persist()
-    try:
-        # ONE validation job instead of three probes + a bounds aggregate:
-        # per-key group counts feed a single-row rollup carrying (a) any
-        # unknown op, (b) max multiplicity over fully-non-NULL keys (the
-        # dup contract — NULL keys never match, SQL semantics), (c) any
-        # upsert row (the delete-only-shape gate), (d) per-key min/max
-        # (the data-skipping pre-cut + rebase disjointness footprint,
-        # min/max over group keys == min/max over rows). The per-key
-        # frame is PERSISTED as the distinct-key side: the discovery
-        # semi-join and the write's anti-join reuse its materialization
-        # instead of re-aggregating the batch for ``distinct()`` (same
-        # shuffle, computed once — §2.4). O(batch keys), released in
-        # finally. The failure paths re-probe to name the offending
-        # value — errors may pay one extra job; the happy path never
-        # does.
-        keys_nonnull = F.col(keys[0]).isNotNull()
-        for k in keys[1:]:
-            keys_nonnull = keys_nonnull & F.col(k).isNotNull()
-        per_key = (
-            tagged.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n__"),
-                 F.max(F.col("__op__").isNull().cast("int")).alias("__bad__"),
-                 F.max((F.col("__op__") == "upsert").cast("int"))
-                 .alias("__ups__"))
-            .persist())
-        probe = (
-            per_key
-            .agg(F.max("__bad__").alias("__bad__"),
-                 F.max(F.when(keys_nonnull, F.col("__n__"))).alias("__dup__"),
-                 F.max("__ups__").alias("__ups__"),
-                 F.sum("__n__").alias("__rows__"),
-                 *filestats.key_bounds_aggs(keys))
-            .collect()[0]
-        )
+    with contextlib.ExitStack() as pins:
+        # the batch is re-read by the probe AND by the write (anti-join
+        # + upsert projection) — pin it so the plan upstream of the tag
+        # (often a relay diff or a stream source) computes ONCE. O(batch)
+        tagged = _pin(pins, batch.withColumn(
+            "__op__",
+            F.when(op_norm.isin("insert", "i", "update", "u"), "upsert")
+            .when(op_norm.isin("delete", "d"), "delete"),
+        ))
+        # ONE validation job instead of three probes + a bounds
+        # aggregate: per-key group counts feed a single-row rollup that
+        # also carries (a) any unknown op and (b) any upsert row (the
+        # delete-only-shape gate). O(batch keys). The failure paths
+        # re-probe to name the offending value — errors may pay one
+        # extra job; the happy path never does.
+        per_key = _pin(pins, tagged.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("__n__"),
+            F.max(F.col("__op__").isNull().cast("int")).alias("__bad__"),
+            F.max((F.col("__op__") == "upsert").cast("int"))
+            .alias("__ups__")))
+        probe = _key_probe(per_key, keys,
+                           F.max("__bad__").alias("__bad__"),
+                           F.max("__ups__").alias("__ups__"))
         if probe["__bad__"]:
             bad = tagged.filter(F.col("__op__").isNull()).limit(1).collect()
             raise ValueError(
@@ -2958,12 +2921,8 @@ def apply_cdc(
                 "expected insert/update/delete (or I/U/D)"
             )
         if (probe["__dup__"] or 0) > 1:
-            dup = (
-                per_key.dropna(subset=keys)
-                .filter(F.col("__n__") > 1).limit(1).collect()
-            )
             raise ValueError(
-                f"apply_cdc: key {tuple(dup[0][k] for k in keys)} appears "
+                f"apply_cdc: key {_dup_key(per_key, keys)} appears "
                 "more than once in the batch — compact to latest-per-key "
                 "upstream (the batch's internal order is not a contract "
                 "this engine can see)"
@@ -2971,7 +2930,7 @@ def apply_cdc(
         upserts = (tagged.filter(F.col("__op__") == "upsert")
                    .drop("__op__", op_col))
         batch_cols = set(upserts.columns)
-        committed_cols = {f.name for f in schema.fields}
+        committed_cols = {f.name for f in _committed_schema(prev).fields}
         if batch_cols == set(keys) and batch_cols != committed_cols:
             # delete-only convenience shape: the batch carries just the key
             # columns. Sound only if no row actually upserts — an upsert
@@ -2982,97 +2941,11 @@ def apply_cdc(
                     "contains insert/update rows — upserts need the full "
                     "table schema"
                 )
-            upserts = spark.createDataFrame([], schema)
+            upserts = None
         else:
             _check_append_schema(upserts, prev["schema"])
-            _validate_constraints(upserts, prev.get("constraints") or {},
-                                  "apply_cdc")
-
-        batch_rows = int(probe["__rows__"] or 0)
-        files = list(prev["files"])
-        commit_extra = {"merge_on": keys, "merge_mode": "cdc"}
-        if extra:
-            commit_extra.update(extra)
-        if batch_rows == 0:
-            # EMPTY batch (a relay over a logical no-op chain, an idle
-            # micro-batch): nothing to discover, rewrite or insert —
-            # commit metadata-only (extra/txn still ride it, so relay
-            # state and idempotence advance exactly as a data commit
-            # would) instead of paying a discovery scan plus an empty
-            # data-directory write. The [] footprint tells the rebase
-            # an additive winner always commutes (the old empty-append
-            # path rebased the same way).
-            v = _commit_keyed_with_rebase(path, "merge", parent, prev,
-                                          files, commit_extra,
-                                          [], spark=spark)
-            return v, {"files_rewritten": 0, "files_carried": len(files),
-                       "files_written": 0, "rows_applied": 0,
-                       "probe_jobs": 1}
-        src_keys = per_key.select(*keys)
-        if 0 < batch_rows <= _KEYS_BCAST_MAX_ROWS:
-            # probe-proven small batch: broadcast the key side outright
-            src_keys = F.broadcast(src_keys)
-        stats = {"files_rewritten": 0, "files_carried": len(files),
-                 "files_written": 0, "rows_applied": batch_rows,
-                 "probe_jobs": 1}
-        touched: set[str] = set()
-        # key footprint: discovery pre-cut AND the concurrent-append
-        # disjointness proof for the rebasing commit below
-        where_hint = _phys_where(_col_mapping(prev),
-                                 filestats.key_bounds_from_row(probe, keys))
-        if files:
-            # spark handed through: a >100k-file manifest pre-cuts as a
-            # distributed job instead of a driver loop (measured 0.8 s
-            # per 100k files driver-side — DRIVER_FILES_AUDIT.json)
-            scan_files = (
-                filestats.prune_files(path, files, where_hint,
-                                      spark=spark)
-                if where_hint else files
-            )
-            stats["files_scan_skipped"] = len(files) - len(scan_files)
-            if scan_files:
-                touched = {
-                    r[0]
-                    for r in _read_snapshot(spark, path, prev,
-                                            files=scan_files,
-                                            _with_position=True)
-                    .select(F.col("__file__"), *keys)
-                    .join(src_keys, on=keys, how="leftsemi")
-                    .select("__file__").distinct().collect()
-                }
-        carried = [f for f in files if f not in touched]
-        parts = []
-        if touched:
-            parts.append(
-                _read_snapshot(spark, path, prev, files=sorted(touched))
-                .join(src_keys, on=keys, how="left_anti")
-            )
-        parts.append(upserts.select(*[f.name for f in schema.fields]))
-        new_data = parts[0]
-        for p in parts[1:]:
-            new_data = new_data.unionByName(p)
-        version = parent + 1
-        # rewrite size ≈ touched files (survivors ⊆ touched, and the
-        # replace shape re-lands roughly the touched rows — 2× margin)
-        # plus the batch itself, estimated from the probe's row total
-        # at a conservative 256 B/row so a bulk insert-only CDC batch
-        # at scale keeps its input partitioning instead of paying a
-        # full extra shuffle
-        new_files = _write_data_dir(
-            new_data, path, version, mapping=_col_mapping(prev),
-            size_hint=2 * _local_bytes(path, touched)
-            + 256 * batch_rows)
-        v = _commit_keyed_with_rebase(path, "merge", parent, prev,
-                                      carried + new_files, commit_extra,
-                                      where_hint, spark=spark,
-                                      new_files=new_files)
-        stats.update({"files_rewritten": len(touched),
-                      "files_carried": len(carried),
-                      "files_written": len(new_files)})
-        return v, stats
-    finally:
-        per_key.unpersist()
-        tagged.unpersist()
+        return _keyed_rewrite(spark, pins, path, parent, prev, keys,
+                              per_key, probe, upserts, "cdc", extra)
 
 
 def versioned_stream_cdc(path: str, on: str | list[str],
@@ -3085,18 +2958,10 @@ def versioned_stream_cdc(path: str, on: str | list[str],
     change capture — bootstrap the initial snapshot with
     ``write_versioned`` or the append writer first)."""
     keys = [on] if isinstance(on, str) else list(on)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        hw = last_stream_batch(path, stream_id)
-        if hw is not None and batch_id <= hw:
-            return
+    return _stream_sink(
+        path, stream_id, lambda batch_df, _batch_id, extra, txn:
         apply_cdc(batch_df.sparkSession, path, batch_df, keys,
-                  op_col=op_col,
-                  extra={"stream_batch_id": int(batch_id),
-                         "stream_id": stream_id},
-                  txn=(f"stream:{stream_id}", int(batch_id)))
-
-    return _write
+                  op_col=op_col, extra=extra, txn=txn))
 
 
 def purge_dvs(spark: SparkSession, path: str) -> tuple[int, dict]:
@@ -3772,6 +3637,58 @@ def _follow_evolution(spark, path: str, want_fields: list,
     return len(pairs)
 
 
+def _relay_start(spark: SparkSession, src_path: str, dst_path: str,
+                 stream_id: str, kind: str, reserved: tuple = (),
+                 bootstrap=lambda snap, src_v: snap):
+    """Shared head of ``relay_changes`` / ``replicate_versioned``:
+    ``(src_v, state, src_fields, done)``, ``done`` being the verb's
+    return value when it bootstraps or has nothing to relay."""
+    src_v = latest_version(src_path)
+    if src_v is None:
+        raise FileNotFoundError(f"no versioned table at {src_path}")
+    src_man = _read_manifest_meta(src_path, src_v)
+    src_fields = [(f["name"], f["type"])
+                  for f in json.loads(src_man["schema"])["fields"]]
+    for name, _ in src_fields:
+        if name in reserved:
+            raise ValueError(
+                f"source column {name!r} collides with a change-"
+                "feed column; rename it before relaying"
+            )
+    state = _relay_state_recovered(dst_path, stream_id)
+    if state is None:
+        if latest_version(dst_path) is not None:
+            # NO recoverable relay state (retained manifests and txn
+            # sidecar both lost it) is not a bootstrap situation:
+            # overwriting would silently destroy committed state (a
+            # feed's retained history, which truncate_changes' consumer
+            # protocol depends on). Bootstrap only writes fresh paths.
+            raise ValueError(
+                f"{dst_path} already holds data but carries no relay "
+                f"state for stream {stream_id!r} — refusing to "
+                f"re-bootstrap over an existing {kind} (its committed "
+                f"state would be destroyed); relay to a fresh path, or "
+                f"restore the {kind}'s commit chain"
+            )
+        snap = read_versioned(spark, src_path, version=src_v)
+        # data + relay state + txn identifier ride ONE commit: a crash
+        # can never leave a bootstrapped copy without its resume
+        # position (the old two-commit shape re-bootstrapped on that
+        # crash, destroying the feed under checkpointed consumers), and
+        # a racing twin's write_versioned no-ops on the txn
+        v = write_versioned(
+            bootstrap(snap, src_v), dst_path,
+            extra={"relay_stream": stream_id,
+                   "relay_src_version": src_v},
+            txn=(f"cdf:{stream_id}", src_v))
+        return src_v, state, src_fields, (
+            v, {"bootstrap": True, "src_version": src_v})
+    if state == src_v:
+        return src_v, state, src_fields, (latest_version(dst_path), {
+            "bootstrap": False, "src_version": src_v, "ops": 0})
+    return src_v, state, src_fields, None
+
+
 def relay_changes(
     spark: SparkSession,
     src_path: str,
@@ -3817,51 +3734,13 @@ def relay_changes(
     update_preimage) for audit/diff consumers. Returns
     ``(feed_version, stats)``."""
     keys = [on] if isinstance(on, str) else list(on)
-    src_v = latest_version(src_path)
-    if src_v is None:
-        raise FileNotFoundError(f"no versioned table at {src_path}")
-    src_man = _read_manifest_meta(src_path, src_v)
-    src_cols = [f["name"]
-                for f in json.loads(src_man["schema"])["fields"]]
-    for reserved in ("op", "_src_version"):
-        if reserved in src_cols:
-            raise ValueError(
-                f"source column {reserved!r} collides with a change-"
-                "feed column; rename it before relaying"
-            )
-    state = _relay_state_recovered(feed_path, stream_id)
-    if state is None:
-        if latest_version(feed_path) is not None:
-            # an existing feed with NO recoverable relay state (both
-            # the retained manifests and the txn sidecar lost it) is
-            # not a bootstrap situation — overwriting would silently
-            # destroy the retained history that truncate_changes'
-            # consumer protocol depends on. Bootstrap only writes to
-            # fresh paths.
-            raise ValueError(
-                f"{feed_path} already holds data but carries no relay "
-                f"state for stream {stream_id!r} — refusing to "
-                "re-bootstrap over an existing feed (its retained "
-                "history would be destroyed); relay to a fresh "
-                "feed_path, or restore the feed's commit chain"
-            )
-        snap = read_versioned(spark, src_path, version=src_v)
-        ops = (snap.withColumn("op", F.lit("I"))
-               .withColumn("_src_version", F.lit(src_v)))
-        # data + relay state + txn identifier ride ONE commit: a crash
-        # can never leave a bootstrapped feed without its state (the
-        # old two-commit shape re-bootstrapped on that crash,
-        # destroying the feed under checkpointed consumers), and a
-        # racing twin's write_versioned no-ops on the txn
-        v = write_versioned(
-            ops, feed_path,
-            extra={"relay_stream": stream_id,
-                   "relay_src_version": src_v},
-            txn=(f"cdf:{stream_id}", src_v))
-        return v, {"bootstrap": True, "src_version": src_v}
-    if state == src_v:
-        return latest_version(feed_path), {
-            "bootstrap": False, "src_version": src_v, "ops": 0}
+    reserved = ("op", "_src_version")
+    src_v, state, src_fields, done = _relay_start(
+        spark, src_path, feed_path, stream_id, "feed", reserved,
+        lambda snap, src_v: snap.withColumn("op", F.lit("I"))
+        .withColumn("_src_version", F.lit(src_v)))
+    if done is not None:
+        return done
     # diff validates the chain is at most renames + ADDITIVE evolution
     # away and presents src_v's schema (old epochs NULL-fill the newer
     # columns); the feed then FOLLOWS — renames and add-column/widen
@@ -3873,14 +3752,10 @@ def relay_changes(
     # is bounded by the change set, never the table).
     d = diff_versions(spark, src_path, state, src_v,
                       cluster_by=keys).persist()
-    _follow_evolution(
-        spark, feed_path,
-        [(f["name"], f["type"])
-         for f in json.loads(src_man["schema"])["fields"]],
-        reserved=("op", "_src_version"))
+    _follow_evolution(spark, feed_path, src_fields, reserved=reserved)
     ops = (_ops_from_diff(d, keys, preimages=include_preimages)
            .withColumn("_src_version", F.lit(src_v))
-           .select(*src_cols, "op", "_src_version"))
+           .select(*[name for name, _ in src_fields], *reserved))
     # txn identifiers make the relay append idempotent under RACES,
     # not just replays: two relays of the same stream started together
     # both compute the same ops, but the loser's auto-rebased append
@@ -3934,31 +3809,10 @@ def replicate_versioned(
     the cost of the changed files only. Returns ``(dst_version,
     stats)``."""
     keys = [on] if isinstance(on, str) else list(on)
-    src_v = latest_version(src_path)
-    if src_v is None:
-        raise FileNotFoundError(f"no versioned table at {src_path}")
-    state = _relay_state_recovered(dst_path, stream_id)
-    if state is None:
-        if latest_version(dst_path) is not None:
-            raise ValueError(
-                f"{dst_path} already holds data but carries no relay "
-                f"state for stream {stream_id!r} — refusing to "
-                "re-bootstrap over an existing replica (its committed "
-                "state would be destroyed); replicate to a fresh "
-                "dst_path, or restore the replica's commit chain"
-            )
-        snap = read_versioned(spark, src_path, version=src_v)
-        # snapshot + relay state + txn identifier as ONE commit — no
-        # crash window between replica data and its resume position
-        v = write_versioned(
-            snap, dst_path,
-            extra={"relay_stream": stream_id,
-                   "relay_src_version": src_v},
-            txn=(f"cdf:{stream_id}", src_v))
-        return v, {"bootstrap": True, "src_version": src_v}
-    if state == src_v:
-        return latest_version(dst_path), {
-            "bootstrap": False, "src_version": src_v, "ops": 0}
+    src_v, state, src_fields, done = _relay_start(
+        spark, src_path, dst_path, stream_id, "replica")
+    if done is not None:
+        return done
     # MATERIALIZE the delta once (Delta materializes its MERGE source
     # for the same reason): the ops plan references the diff several
     # times (the I/U/D compaction joins), and apply_cdc's validation /
@@ -3976,11 +3830,7 @@ def replicate_versioned(
     # that commit exactly as they rode the old empty append.
     d = diff_versions(spark, src_path, state, src_v,
                       cluster_by=keys).persist()
-    src_man = _read_manifest_meta(src_path, src_v)
-    _follow_evolution(
-        spark, dst_path,
-        [(f["name"], f["type"])
-         for f in json.loads(src_man["schema"])["fields"]])
+    _follow_evolution(spark, dst_path, src_fields)
     ops = _ops_from_diff(d, keys)
     try:
         v, st = apply_cdc(

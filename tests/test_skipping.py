@@ -1738,20 +1738,72 @@ class TestKeyedMaintenanceStats:
 
     def test_apply_cdc_empty_batch_is_metadata_only(self, spark,
                                                     tmp_path):
-        t = str(tmp_path / "ks_empty")
+        """Run over both keyed verbs (one loop, so the test id stays
+        stable): an empty CDC batch and an empty merge source both
+        commit metadata only."""
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        empty = o.limit(0).filter(F.lit(False))
+        verbs = {
+            "apply_cdc": lambda t: V.apply_cdc(
+                spark, t, empty.withColumn("op", F.lit("I")), "o_orderkey"),
+            "merge_versioned": lambda t: V.merge_versioned(
+                spark, t, empty, "o_orderkey"),
+        }
+        for verb, call in verbs.items():
+            t = str(tmp_path / f"ks_empty_{verb}")
+            V.write_versioned(o.limit(200), t)
+            man1 = V._read_manifest(t, 1)
+            v, st = call(t)
+            assert v == 2, verb
+            assert st["rows_applied"] == 0, verb
+            assert st["files_written"] == 0, verb
+            assert st["files_scan_skipped"] == 0, verb
+            man2 = V._read_manifest(t, v)
+            # metadata-only: the exact same files carry, no new data dir
+            assert man2["files"] == man1["files"], verb
+            assert _same(V.read_versioned(spark, t),
+                         V.read_versioned(spark, t, 1))
+
+    def test_keyed_commits_share_one_stats_record(self, spark, tmp_path):
+        """merge_versioned and apply_cdc return the same stats keys, and
+        a copy-on-write delete returns the same rewrite accounting."""
+        t = str(tmp_path / "ks_keys")
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        V.write_versioned(o.repartitionByRange(4, "o_orderkey"), t)
+        upd = (o.filter("o_orderkey <= 100")
+               .withColumn("o_totalprice", F.lit(1.0)))
+        _, sm = V.merge_versioned(spark, t, upd, "o_orderkey")
+        _, sc = V.apply_cdc(spark, t, upd.withColumn("op", F.lit("U")),
+                            "o_orderkey")
+        _, sd = V.delete_versioned(spark, t, "o_orderkey <= 50")
+        rewrite = {"files_rewritten", "files_carried", "files_written"}
+        assert set(sm) == set(sc) == rewrite | {
+            "files_scan_skipped", "rows_applied", "probe_jobs"}
+        assert set(sd) == rewrite | {"rows_deleted"}
+        assert sm["rows_applied"] == sc["rows_applied"] == upd.count()
+        assert sd["files_rewritten"] >= 1 and sd["rows_deleted"] > 0
+
+    @pytest.mark.parametrize("verb", ["merge_versioned", "apply_cdc"])
+    def test_missing_key_raises_analysis_error_and_unpins(self, spark,
+                                                          tmp_path, verb):
+        """A batch without the key column fails in the probe build: the
+        AnalysisException itself surfaces (not a secondary error from
+        the cleanup), and the batch pins are released."""
+        from pyspark.errors import AnalysisException
+
+        t = str(tmp_path / "ks_nokey")
         o = _orders(spark).select("o_orderkey", "o_totalprice")
         V.write_versioned(o.limit(200), t)
-        man1 = V._read_manifest(t, 1)
-        batch = (o.limit(0)
-                 .withColumn("op", F.lit("I")).filter(F.lit(False)))
-        v, st = V.apply_cdc(spark, t, batch, "o_orderkey")
-        assert v == 2
-        assert st["rows_applied"] == 0 and st["files_written"] == 0
-        man2 = V._read_manifest(t, v)
-        # metadata-only: the exact same files carry, no new data dir
-        assert man2["files"] == man1["files"]
-        assert _same(V.read_versioned(spark, t),
-                     V.read_versioned(spark, t, 1))
+        batch = o.limit(10).select("o_totalprice")
+        if verb == "apply_cdc":
+            batch = batch.withColumn("op", F.lit("I"))
+        jsc = spark.sparkContext._jsc
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        rdds, cached = jsc.getPersistentRDDs().size(), cache.numCachedEntries()
+        with pytest.raises(AnalysisException):
+            getattr(V, verb)(spark, t, batch, "o_orderkey")
+        assert jsc.getPersistentRDDs().size() == rdds
+        assert cache.numCachedEntries() == cached
 
     def test_empty_footprint_rebases_over_concurrent_append(self, spark,
                                                             tmp_path):

@@ -1126,7 +1126,7 @@ def test_versioned_delete_is_file_grain(spark, tmp_path):
     # no-match delete commits a pure-reference version (0 rewrites)
     v3, stats3 = V.delete_versioned(spark, t, "v > 1e9")
     assert stats3 == {"files_rewritten": 0, "files_carried": 2,
-                      "rows_deleted": 0}
+                      "files_written": 0, "rows_deleted": 0}
     assert V.read_versioned(spark, t, v3).count() == 15
 
 
