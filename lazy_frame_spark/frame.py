@@ -11,7 +11,7 @@ lazy.frame promise env           ``LazyFrame`` wrapping a lazy DataFrame plan
 newline byte index               ``__row_id__`` column (lazy_frame_spark.rowid)
 ``x[j, k]`` RANGE/LINES          ``row_range`` / ``rows`` (pushdown filters)
 ``x[, k] op scalar`` WHICH       ``filter`` / ``which`` (typed_compare)
-``head``/``tail``                ``head`` / ``tail`` (TakeOrderedAndProject)
+``head``/``tail``                ``head`` / ``tail`` (id-range pruned)
 ``column_attr``                  ``ColumnAttrs`` applied at ``to_pandas``
 ``[<-`` write denial             ``__setitem__`` raises (read-only contract)
 ``str``/``print``                ``describe_str`` / ``show``
@@ -26,6 +26,11 @@ Scale notes (100 TB design):
 - ``which()`` returns a DataFrame of ids, not a collected vector; the
   reference's own "return a giant index vector to the driver" pattern is
   the anti-scale path and is opt-in only (``collect=True``).
+- A positional call costs a constant number of Python→JVM round trips,
+  whatever the frame's width: predicates and projections go to the JVM
+  as one SQL string or one name list, never one ``Column`` per id or
+  field (with DataFrame debugging on, each ``Column`` built in Python
+  costs several round trips).
 """
 
 from __future__ import annotations
@@ -70,10 +75,10 @@ def _warn_sample_unverified() -> None:
     )
 
 
-def _qcol(name: str) -> Column:
-    """Column by exact name — backtick-quoted so dotted names (e.g. the
-    reference's canonical ``Sepal.Length``) resolve literally."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _quote(name: str) -> str:
+    """SQL identifier for an exact name — backtick-quoted so dotted names
+    (e.g. the reference's canonical ``Sepal.Length``) resolve literally."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class LazyFrame:
@@ -104,6 +109,10 @@ class LazyFrame:
         self._verify_root: "LazyFrame | None" = None
         self._verify_ops: tuple = ()
         self._verify_swapped = False
+        # row count N of an indexed root, counted by the verify aggregate
+        # fused into the index build; its ids are then dense 1..N, so
+        # head/tail become id-range predicates and nrow() is free
+        self._n_rows: int | None = None
 
     # ------------------------------------------------------------------ #
     # construction
@@ -264,22 +273,23 @@ class LazyFrame:
         self._df = df
         return df
 
-    def _count_corrupt(self, vdf: DataFrame) -> int:
+    def _count_corrupt(self, vdf: DataFrame) -> tuple[int, int]:
         """The ONE corrupt-channel aggregate both verify paths share:
         sums the channel while referencing every user column, so the
         CSV parser cannot prune — malformed values in any field flag
-        the channel. Returns the count of rows the sample-inferred
-        schema failed to parse."""
+        the channel. Returns ``(bad, n)``: the count of rows the
+        sample-inferred schema failed to parse, and the row count."""
         from lazy_frame_spark.sources.csv import CORRUPT_COL
 
         user_cols = [c for c in vdf.columns
                      if c not in (CORRUPT_COL, ROW_ID)]
-        checks = vdf.agg(
-            F.sum(F.col(CORRUPT_COL).isNotNull().cast("long")).alias("__bad__"),
-            *[F.count(_qcol(c)).alias(f"__c{i}__")
+        checks = vdf.selectExpr(
+            f"sum(CAST({CORRUPT_COL} IS NOT NULL AS BIGINT)) AS __bad__",
+            "count(1) AS __n__",
+            *[f"count({_quote(c)}) AS __c{i}__"
               for i, c in enumerate(user_cols)],
         ).collect()[0]
-        return int(checks["__bad__"] or 0)
+        return int(checks["__bad__"] or 0), int(checks["__n__"])
 
     def _ensure_verified(self) -> None:
         """Standalone schema verification for the FIRST materialization
@@ -352,7 +362,7 @@ class LazyFrame:
         """ONE corrupt-count aggregate over the verify frame. Clean →
         ``self`` keeps its frame (returns it); dirty → swap in the
         full-inference reopen and return None."""
-        bad = self._count_corrupt(vdf)
+        bad, _ = self._count_corrupt(vdf)
         self._verify_df = None
         if bad:
             if self._reopen_full is None:
@@ -375,7 +385,7 @@ class LazyFrame:
         default paid up front on every open."""
         from lazy_frame_spark.sources.csv import CORRUPT_COL
 
-        bad = self._count_corrupt(df)
+        bad, n = self._count_corrupt(df)
         if bad:
             try:
                 (handle or df).unpersist()
@@ -391,6 +401,7 @@ class LazyFrame:
             self._verify_swapped = True
             return None, None
         self._verify_df = None
+        self._n_rows = n
         return df.drop(CORRUPT_COL), handle
 
     def close(self) -> None:
@@ -437,6 +448,8 @@ class LazyFrame:
         return self._derive(op, self._attrs.renamed(mapping))
 
     def nrow(self) -> int:
+        if self._n_rows is not None:  # counted by the index build
+            return self._n_rows
         # a derived chain must settle first: a filter's row count DEPENDS
         # on the schema (a sample-missed type parses to NULL →
         # compare-false), so counting a stale pre-swap plan would lie.
@@ -472,7 +485,7 @@ class LazyFrame:
 
         def op(df: DataFrame) -> DataFrame:
             keep = [c for c in df.columns if c == ROW_ID] + names
-            return df.select(*[_qcol(c) for c in keep])
+            return df.selectExpr(*map(_quote, keep))
 
         return self._derive(op, self._attrs.restrict(names))
 
@@ -509,12 +522,15 @@ class LazyFrame:
         stats prune non-matching groups, the distributed analogue of the
         reference's single seek+read between newline offsets.
         """
-        df = self._with_ids()
-        return LazyFrame(
-            df.filter(F.col(ROW_ID).between(int(lo), int(hi))),
-            self._attrs.copy(),
-            self._order_by,
-        )
+        return self._where(f"{ROW_ID} BETWEEN {int(lo)} AND {int(hi)}")
+
+    def _where(self, pred: str) -> "LazyFrame":
+        """This frame's indexed rows filtered by one SQL predicate on
+        ``__row_id__``: one JVM call, and the plan keeps a plain
+        range/``In``/``InSet`` comparison, which the cached batches'
+        min/max stats and Parquet row-group stats prune on."""
+        return LazyFrame(self._with_ids().filter(pred), self._attrs.copy(),
+                         self._order_by)
 
     def rows(self, indices: Iterable[int]) -> "LazyFrame":
         """Arbitrary row set, 1-based (LINES, src/lazy.frame.c:219-245).
@@ -522,22 +538,20 @@ class LazyFrame:
         Set semantics in ``__row_id__`` order — the reference's dominant
         behavior (its contiguity shortcut already ignores request order,
         ``R/lazy.frame.R:152``, documented in SURVEY.md §2.1). Small sets
-        become an ``isin`` (pushed to the scan); large sets become a
+        become an ``IN`` predicate (pushed to the scan); large sets become a
         broadcast semi-join against an id DataFrame so the predicate never
         bloats the plan.
         """
         ids = sorted({int(i) for i in indices})
         if any(i < 1 for i in ids):
             raise IndexError("row indices are 1-based and must be positive")
-        df = self._with_ids()
         if not ids:
-            return LazyFrame(df.filter(F.lit(False)), self._attrs.copy(), self._order_by)
+            return self._where("false")
         if len(ids) == ids[-1] - ids[0] + 1:  # contiguous → range pruning
-            pred = F.col(ROW_ID).between(ids[0], ids[-1])
-            return LazyFrame(df.filter(pred), self._attrs.copy(), self._order_by)
+            return self._where(f"{ROW_ID} BETWEEN {ids[0]} AND {ids[-1]}")
         if len(ids) <= 10_000:
-            pred = F.col(ROW_ID).isin(ids)
-            return LazyFrame(df.filter(pred), self._attrs.copy(), self._order_by)
+            return self._where(f"{ROW_ID} IN ({','.join(map(str, ids))})")
+        df = self._with_ids()
         lookup = df.sparkSession.createDataFrame(
             [(i,) for i in ids], schema=f"{ROW_ID} long"
         )
@@ -557,17 +571,33 @@ class LazyFrame:
         return LazyFrame(picked, self._attrs.copy(), self._order_by)
 
     def head(self, n: int = 6) -> "LazyFrame":
-        """First n rows in positional order (L1, ``R/lazy.frame.R:234-239``)."""
-        df = self._with_ids()
-        return LazyFrame(
-            df.orderBy(ROW_ID).limit(int(n)), self._attrs.copy(), self._order_by
-        )
+        """First n rows in positional order (L1, ``R/lazy.frame.R:234-239``).
+
+        On an indexed root (ids dense 1..N) the rows are ``__row_id__ <=
+        n``, so only the leading cached batch is read; elsewhere (a
+        filtered or selected child, sparse ids) the top n of all ids."""
+        n = int(n)
+        self._with_ids()  # a first touch builds the index and counts N
+        if self._n_rows is not None:
+            return self._where(f"{ROW_ID} <= {n}")._first(n)
+        return self._first(n)
 
     def tail(self, n: int = 6) -> "LazyFrame":
-        """Last n rows in positional order (L2, ``R/lazy.frame.R:241-244``)."""
+        """Last n rows in positional order (L2, ``R/lazy.frame.R:241-244``),
+        pruned to ``__row_id__ > N - n`` on an indexed root (see
+        ``head``)."""
+        n = int(n)
         df = self._with_ids()
-        last = df.orderBy(F.col(ROW_ID).desc()).limit(int(n)).orderBy(ROW_ID)
+        if self._n_rows is not None:
+            return self._where(f"{ROW_ID} > {self._n_rows - n}")._first(n)
+        last = df.orderBy(F.col(ROW_ID).desc()).limit(n).orderBy(ROW_ID)
         return LazyFrame(last, self._attrs.copy(), self._order_by)
+
+    def _first(self, n: int) -> "LazyFrame":
+        """The n lowest ids in id order (TakeOrderedAndProject)."""
+        df = self._with_ids()
+        return LazyFrame(df.orderBy(ROW_ID).limit(n), self._attrs.copy(),
+                         self._order_by)
 
     # ------------------------------------------------------------------ #
     # predicates (F1/F2/F3 parity)
@@ -580,7 +610,7 @@ class LazyFrame:
         names = self._resolve_cols(col)
         if len(names) != 1:
             raise KeyError(f"no such column: {col!r}")
-        return _qcol(names[0])
+        return F.col(_quote(names[0]))
 
     def filter(self, col: str | int | Column, op: str | None = None, value: Any = None) -> "LazyFrame":
         """``x[x[,k] op v, ]`` in one Catalyst plan (F3). Either a Column
@@ -603,13 +633,15 @@ class LazyFrame:
         """Matching 1-based row indices (WHICH, ``src/lazy.frame.c:507-773``;
         1-based via ``R/lazy.frame.R:203``). Returns a DataFrame of ids in
         ascending order; ``collect=True`` opts into a driver-side list —
-        the reference's own anti-scale pattern, off by default."""
+        the reference's own anti-scale pattern, off by default. The list
+        is collected unsorted in one job and sorted on the driver: a
+        distributed sort of ids already bound for the driver would cost
+        a sampling job and a shuffle."""
         self._with_ids()
-        filtered = self.filter(col, op, value)
-        ids = filtered._df.select(ROW_ID).orderBy(ROW_ID)
+        ids = self.filter(col, op, value)._df.select(ROW_ID)
         if collect:
-            return [r[ROW_ID] for r in ids.collect()]
-        return ids.withColumnRenamed(ROW_ID, "row_id")
+            return sorted(r[0] for r in ids.collect())
+        return ids.orderBy(ROW_ID).withColumnRenamed(ROW_ID, "row_id")
 
     # ------------------------------------------------------------------ #
     # R-flavored indexing sugar
@@ -713,7 +745,7 @@ class LazyFrame:
         self._ensure_verified()
         if with_row_id:
             return self._with_ids()
-        return self._df.select(*[_qcol(c) for c in self.columns])
+        return self._df.drop(*self._INTERNAL)
 
     def to_pandas(self):
         """Materialize via Arrow; re-apply column attributes here — the
@@ -725,10 +757,8 @@ class LazyFrame:
         # whose first data access is to_pandas() would skip the
         # sample-schema check every other read path gets
         self._ensure_verified()
-        cols = self.columns
         if "__row_name__" in self._df.columns:
-            pdf = self._df.select("__row_name__", *[_qcol(c) for c in cols]).toPandas()
-            pdf = pdf.set_index("__row_name__")
+            pdf = self._df.drop(ROW_ID).toPandas().set_index("__row_name__")
             pdf.index.name = None
         else:
             pdf = self.to_df().toPandas()

@@ -86,7 +86,8 @@ def _pin(key: str, df: DataFrame) -> DataFrame:
 
 
 def release_sketches() -> None:
-    """Unpersist every sketch frame pinned by the dedup operators. Results
+    """Unpersist every sketch frame pinned by the dedup operators (and a
+    large doomed-id set pinned by ``semantic_dedup_against``). Results
     derived from a released sketch stay correct — they just recompute."""
     for key in list(_SKETCH_PINS):
         try:

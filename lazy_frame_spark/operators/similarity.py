@@ -708,6 +708,27 @@ def semantic_dedup(
     return df.join(doomed, on=id_col, how="left_anti")
 
 
+#: doomed-id sets up to this size come back to the driver (one collect)
+#: and re-enter the plan as a local relation, so the call leaves no pin.
+#: A size bound, not a measured crossover: 10k ids are ~80 KB of longs,
+#: the id count ``LazyFrame.rows`` also sends as one literal list
+_DOOMED_LOCAL_MAX = 10_000
+
+
+def _materialized_ids(ids: DataFrame) -> DataFrame:
+    """``ids`` evaluated once, for a plan that reads it twice. A small
+    set comes back as a local relation, so nothing stays pinned after
+    the call. A larger one is persisted in the dedup operators' pin
+    registry (``dedup._pin``): the next call replaces that pin, and
+    ``release_sketches()`` drops it."""
+    from lazy_frame_spark.operators.dedup import _pin
+
+    rows = ids.limit(_DOOMED_LOCAL_MAX + 1).collect()
+    if len(rows) <= _DOOMED_LOCAL_MAX:
+        return ids.sparkSession.createDataFrame(rows, ids.schema)
+    return _pin("semantic_dedup_against.doomed", ids)
+
+
 def semantic_dedup_against(
     df_new: DataFrame,
     corpus: DataFrame,
@@ -735,7 +756,10 @@ def semantic_dedup_against(
     store them — the cell is partition-prunable) instead of
     re-assigning per increment. ``persist_cells=True`` pins both
     assigned frames for the duration of the plan; the caller releases
-    them (spark.catalog.clearCache() or a persist manager).
+    them (spark.catalog.clearCache() or a persist manager). Without it
+    the call leaves nothing pinned, unless the batch has more than
+    ``_DOOMED_LOCAL_MAX`` corpus matches: those ids stay pinned until
+    the next call or ``release_sketches()``.
 
     Measured crossover (SCALE.md round 10, 10k batch / 256 cells):
     below ~a-few-hundred-k corpus vectors just re-dedup the union with
@@ -784,18 +808,17 @@ def semantic_dedup_against(
         # Round 15 measured the Arrow pass SLOWER here (9.0 vs 5.8 s
         # at sf0.1) because `doomed` feeds two consumers — stage 2's
         # input and the final anti-join — and an unpinned Python stage
-        # re-executes per consumer. PERSISTING doomed (ids only, tiny)
-        # runs each Arrow stage once; the pin follows the same
-        # caller-released lifecycle as persist_cells. Round-16 re-A/B
-        # with the pin (6 interleaved reps each, sf0.1): Arrow mins
-        # 4.45-5.46 s vs Catalyst 4.38-9.10 s — a LOCAL tie (means
-        # 4.95 vs 5.59), adopted for the paper-regime shape where the
-        # per-pair interpreted fold is the measured wall (the
-        # semantic_dedup self-join case won 3.8 -> 1.5 s on the same
-        # switch; cells here are corpus x batch, the same quadratic).
+        # re-executes per consumer. Materializing doomed once (ids
+        # only, a subset of the batch) runs each Arrow stage once.
+        # Round-16 re-A/B with doomed pinned (6 interleaved reps each,
+        # sf0.1): Arrow mins 4.45-5.46 s vs Catalyst 4.38-9.10 s — a
+        # LOCAL tie (means 4.95 vs 5.59), adopted for the paper-regime
+        # shape where the per-pair interpreted fold is the measured wall
+        # (the semantic_dedup self-join case won 3.8 -> 1.5 s on the
+        # same switch; cells here are corpus x batch, the same quadratic).
         cand = _pair_candidates_arrow_against(
             new_cells, corp_cells, id_col, dim, threshold)
-        doomed_a = _doomed_exact(cand, id_col, threshold).persist()
+        doomed_a = _materialized_ids(_doomed_exact(cand, id_col, threshold))
         fresh_a = new_cells.join(doomed_a, on=id_col, how="left_anti")
         cand2 = _pair_candidates_arrow(fresh_a, id_col, dim, threshold)
         doomed2_a = _doomed_exact(cand2, id_col, threshold)

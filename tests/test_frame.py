@@ -188,3 +188,167 @@ def test_decode_factors_skips_value_typed_string_factor(spark):
     # the skipped column KEEPS its levels attr for the pandas boundary
     assert lf.decode_factors().column_attr("tag", "levels") == ["a", "b", "c"]
     assert lf.decode_factors().column_attr("code", "levels") is None
+
+
+# --------------------------------------------------------------------- #
+# positional fast paths on the cached row index
+# --------------------------------------------------------------------- #
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn()`` starts, counted through its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lfs-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "positional fast-path test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _py4j_calls(spark, monkeypatch, fn) -> int:
+    """py4j call (``c``) commands ``fn()`` sends to the JVM."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        n += command.startswith("c\n")
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        fn()
+    finally:
+        monkeypatch.setattr(client, "send_command", send)
+    return n
+
+
+@pytest.fixture(scope="module")
+def wide_csv(tmp_path_factory):
+    """A 27-column CSV in the reference's medium schema (2 string,
+    3 double, 22 int), 300 rows."""
+    import random
+
+    rng = random.Random(7)
+    head = ",".join(f"col{i}" for i in range(1, 28))
+    lines = [head]
+    for r in range(1, 301):
+        vals = [f"s{r}", f"t{r % 5}"]
+        vals += [f"{rng.uniform(-1, 1):.4f}" for _ in range(3)]
+        vals += [str(rng.randint(-1000, 1000)) for _ in range(22)]
+        lines.append(",".join(vals))
+    p = tmp_path_factory.mktemp("wide") / "wide.csv"
+    p.write_text("\n".join(lines) + "\n")
+    return str(p)
+
+
+#: py4j calls one ``row_range(...).to_pandas()`` may cost on an indexed
+#: frame: the filter, the Arrow collect and its conf reads (20 on Spark
+#: 4.1); one Column per field cost 82 at 5 columns and 236 at 27
+PY4J_ROW_RANGE_BUDGET = 40
+
+
+def test_row_range_py4j_calls_independent_of_width(spark, iris_csv, wide_csv,
+                                                   monkeypatch):
+    counts = []
+    for path in (iris_csv, wide_csv):
+        lf = LazyFrame.open(spark, path)
+        lf.row_range(1, 2).to_pandas()  # builds the index
+        lf.row_range(3, 9).to_pandas()  # first-call py4j warm-up
+        got = []
+        n = _py4j_calls(spark, monkeypatch,
+                        lambda: got.append(lf.row_range(5, 12).to_pandas()))
+        assert len(got[0]) == 8 and list(got[0].columns) == lf.columns
+        counts.append(n)
+        lf.close()
+    assert counts[0] == counts[1], counts
+    assert counts[0] <= PY4J_ROW_RANGE_BUDGET, counts
+
+
+def test_indexed_root_nrow_dim_run_no_job(spark, wide_csv):
+    lf = LazyFrame.open(spark, wide_csv)
+    lf.row_range(1, 3).to_pandas()  # the build counts N
+    jobs, dim = _jobs(spark, lambda: (lf.nrow(), lf.dim()))
+    assert jobs == 0
+    assert dim == (300, (300, 27))
+    lf.close()
+
+
+def test_which_collect_runs_one_job(spark, wide_csv):
+    import pandas as pd
+
+    lf = LazyFrame.open(spark, wide_csv)
+    lf.row_range(1, 3).to_pandas()
+    jobs, ids = _jobs(spark, lambda: lf.which("col20", ">", 0, collect=True))
+    want = pd.read_csv(wide_csv)
+    assert jobs == 1
+    assert ids == [i + 1 for i in want.index[want["col20"] > 0]]
+    lf.close()
+
+
+def _ids(lf) -> list[int]:
+    return lf.to_df(with_row_id=True).toPandas()["__row_id__"].tolist()
+
+
+def test_head_tail_prune_on_indexed_root(spark, wide_csv):
+    lf = LazyFrame.open(spark, wide_csv)
+    assert _ids(lf.head(4)) == [1, 2, 3, 4]  # first touch builds the index
+    assert _ids(lf.tail(3)) == [298, 299, 300]
+    assert _ids(lf.tail(400)) == list(range(1, 301))
+    plan = lf.tail(3)._df._jdf.queryExecution().optimizedPlan().toString()
+    assert "__row_id__" in plan and "> 297" in plan
+    assert lf.head(2).to_pandas()["col1"].tolist() == ["s1", "s2"]
+    lf.close()
+
+
+def test_head_tail_which_on_sparse_children(spark, iris_csv):
+    """A filtered child has sparse ids: head/tail/which keep the first
+    and last SURVIVING rows in id order, not the root's id ranges."""
+    lf = LazyFrame.open(spark, iris_csv)
+    lf.row_range(1, 2).to_pandas()
+    survivors = [9, 14, 39, 43]                   # Sepal.Length < 4.5
+    child = lf.filter("Sepal.Length", "<", 4.5)
+    assert _ids(child.head(3)) == survivors[:3]
+    assert _ids(child.tail(3)) == survivors[-3:]
+    assert child.which("Sepal.Width", ">", 0, collect=True) == survivors
+    picked = child.select(["Species"])
+    assert _ids(picked.head(2)) == survivors[:2]
+    assert _ids(picked.tail(1)) == survivors[-1:]
+    assert _ids(lf.rows([3, 7, 150]).tail(2)) == [7, 150]
+    lf.close()
+
+
+def test_head_tail_which_after_sample_lied_swap(spark, tmp_path):
+    """After a sample-lied swap to full inference no fused build counted
+    the rows: head/tail/which on the root and on a child built before the
+    swap (which numbers its own rows) return the right rows in order."""
+    from lazy_frame_spark.sources.csv import VERIFY_SAMPLE_LINES
+
+    n = VERIFY_SAMPLE_LINES + 100
+    liar = VERIFY_SAMPLE_LINES + 20
+    lines = ["id,val"] + [f"{i},{i % 7}" for i in range(1, n + 1)]
+    lines[liar] = f"{liar},3.5"
+    p = tmp_path / "liar.csv"
+    p.write_text("\n".join(lines) + "\n")
+
+    lf = LazyFrame.open(spark, str(p))
+    child = lf.filter("val", ">", 2.5)            # built before the swap
+    hits = [i for i in range(1, n + 1) if (3.5 if i == liar else i % 7) > 2.5]
+
+    def data_ids(frame):
+        return frame.to_pandas()["id"].tolist()
+
+    assert data_ids(child.tail(2)) == hits[-2:]   # settles the swap
+    assert lf._verify_swapped
+    assert data_ids(child.head(2)) == hits[:2]
+    assert child.which("val", "==", 3.5, collect=True) == [hits.index(liar) + 1]
+    assert _ids(lf.head(2)) == [1, 2]
+    assert _ids(lf.tail(2)) == [n - 1, n]
+    assert data_ids(lf.tail(1)) == [n]
+    assert lf.which("val", "==", 3.5, collect=True) == [liar]
+    assert lf.nrow() == n
+    lf.close()

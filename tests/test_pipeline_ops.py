@@ -3457,3 +3457,43 @@ def test_semantic_dedup_against_arrow_equals_catalyst(spark, monkeypatch):
     # UP to the threshold — a screen tighter than the round-half-up
     # boundary would keep it and diverge from the Catalyst path
     assert 41 not in got_arrow
+
+
+def test_semantic_dedup_against_releases_its_pin(spark, monkeypatch):
+    """The Arrow path reads its doomed ids twice. A small id set comes
+    back as a local relation, so after the call (and its result's
+    collect) the persistent-RDD count is back to its pre-call value. A
+    set over the cap stays pinned in the dedup pin registry, and
+    ``release_sketches()`` drops it; both give the same survivors."""
+    import numpy as np
+
+    from lazy_frame_spark.operators import dedup
+    from lazy_frame_spark.operators import similarity as sim
+
+    rng = np.random.RandomState(3)
+    base = rng.randn(9, 8)
+    # ids 0-59 repeat directions 0-5 (corpus: ids < 20); ids 60-65 pair
+    # up on directions 6-8, which only the batch holds
+    rows = [(i, [float(x) for x in base[i % 6] + 1e-4 * rng.randn(8)])
+            for i in range(60)]
+    rows += [(i, [float(x) for x in base[6 + (i - 60) // 2]
+                  + 1e-4 * rng.randn(8)]) for i in range(60, 66)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    corpus = df.filter("vec_id < 20")
+    batch = df.filter("vec_id >= 20")
+    jsc = spark.sparkContext._jsc
+
+    def run():
+        return sorted(r["vec_id"] for r in sim.semantic_dedup_against(
+            batch, corpus, n_cells=2, threshold=0.9).collect())
+
+    before = jsc.getPersistentRDDs().size()
+    small = run()
+    assert jsc.getPersistentRDDs().size() == before
+    assert small == [60, 62, 64]  # the first of each batch-only pair
+
+    monkeypatch.setattr(sim, "_DOOMED_LOCAL_MAX", 0)
+    assert run() == small
+    assert jsc.getPersistentRDDs().size() == before + 1
+    dedup.release_sketches()
+    assert jsc.getPersistentRDDs().size() == before

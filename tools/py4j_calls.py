@@ -1,0 +1,102 @@
+"""Python→JVM round trips per positional call on an indexed LazyFrame.
+
+Opens two generated CSVs with the default cached open, a 5-column and a
+27-column one (the reference's medium schema), builds the row index, and
+prints, per call, the py4j call (``c``) commands and all commands it
+sends, plus the Spark jobs it starts. A call whose count grows with the
+frame's width builds one ``Column`` per field somewhere on its path.
+Read-only observability: it never changes what a call computes.
+
+Usage: python tools/py4j_calls.py [--rows N]
+"""
+
+from __future__ import annotations
+
+import argparse
+import collections
+import os
+import random
+import sys
+import tempfile
+import uuid
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from lazy_frame_spark import LazyFrame  # noqa: E402
+from lazy_frame_spark.session import get_spark  # noqa: E402
+
+
+def _write_csv(path: str, n_rows: int, wide: bool) -> None:
+    rng = random.Random(7)
+    with open(path, "w") as f:
+        if wide:
+            f.write(",".join(f"col{i}" for i in range(1, 28)) + "\n")
+            for r in range(1, n_rows + 1):
+                vals = [f"s{r}", f"t{r % 5}"]
+                vals += [f"{rng.uniform(-1, 1):.4f}" for _ in range(3)]
+                vals += [str(rng.randint(-1000, 1000)) for _ in range(22)]
+                f.write(",".join(vals) + "\n")
+        else:
+            f.write("a,b,c,d,e\n")
+            for r in range(1, n_rows + 1):
+                f.write(f"{rng.randint(-1000, 1000)},{rng.random():.3f},"
+                        f"{r},{r % 3},k{r % 7}\n")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--rows", type=int, default=20_000)
+    args = ap.parse_args()
+
+    spark = get_spark("py4j_calls", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    sent: collections.Counter = collections.Counter()
+
+    def counting(command, *a, **kw):
+        sent[command[:1]] += 1
+        return send(command, *a, **kw)
+
+    client.send_command = counting
+
+    def measure(fn) -> tuple[int, int, int]:
+        fn()  # the first call of a shape pays one-time lookups
+        group = f"py4j-calls-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "py4j_calls")
+        sent.clear()
+        try:
+            fn()
+            calls, total = sent["c"], sum(sent.values())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return calls, total, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with tempfile.TemporaryDirectory() as d:
+        print(f"{'frame':>6} {'call':32} {'py4j_c':>6} {'all':>5} {'jobs':>4}")
+        for wide in (False, True):
+            path = os.path.join(d, f"w{wide:d}.csv")
+            _write_csv(path, args.rows, wide)
+            lf = LazyFrame.open(spark, path)
+            lf.row_range(1, 2).to_pandas()  # builds the index
+            c0 = lf.columns[-5]
+            calls = {
+                "row_range(11, 60).to_pandas()": lambda: lf.row_range(11, 60).to_pandas(),
+                "rows(20 points).to_pandas()": lambda: lf.rows(range(3, 400, 20)).to_pandas(),
+                "head(6).to_pandas()": lambda: lf.head(6).to_pandas(),
+                "tail(6).to_pandas()": lambda: lf.tail(6).to_pandas(),
+                "which(c > 0, collect=True)": lambda: lf.which(c0, ">", 0, collect=True),
+                "filter(c < -990).select(3)": lambda: lf.filter(c0, "<", -990)
+                .select(lf.columns[:3]).to_pandas(),
+                "nrow()": lf.nrow,
+            }
+            for name, fn in calls.items():
+                c, total, jobs = measure(fn)
+                print(f"{len(lf.columns):>4}col {name:32} {c:>6} {total:>5} {jobs:>4}")
+            lf.close()
+    client.send_command = send
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()
