@@ -580,12 +580,15 @@ def _commit(
 ) -> int:
     """``dvs`` — the commit's deletion-vector file list (merge-on-read
     deletes, see ``delete_versioned(strategy="merge-on-read")``).
-    ``None`` INHERITS the parent's list: this default is a correctness
+    ``None`` INHERITS the parent's LIVE DVs — those still masking a
+    file of ``files`` (``_live_dvs``): this default is a correctness
     invariant, not a convenience — any commit path that forgot to
     carry the DVs (append, merge, compaction...) would silently
-    RESURRECT merge-on-read-deleted rows. Only a commit that provably
-    supersedes them passes an explicit list (a fresh snapshot, a
-    purge, a full rewrite)."""
+    RESURRECT merge-on-read-deleted rows. A DV whose target files this
+    commit replaced masks nothing any more and is retired here; older
+    manifests keep listing it, so time travel and vacuum stay exact.
+    Only a commit that provably supersedes them passes an explicit list
+    (a fresh snapshot, a purge, a full rewrite)."""
     version = (parent or 0) + 1
     if extra and extra.get("txn_app") is not None \
             and extra.get("txn_version") is not None:
@@ -611,7 +614,7 @@ def _commit(
     # only — never the parent's (possibly offloaded) file LIST
     parent_man = _read_manifest_meta(path, parent) if parent else {}
     if dvs is None:
-        dvs = list(parent_man.get("dv_files", []))
+        dvs = _live_dvs(path, parent_man.get("dv_files"), files)
     # CHECK constraints are table state like DV lists: inherited by
     # every commit (a commit that dropped them would silently stop
     # enforcement) unless an alter commit rewrites them via extra
@@ -815,8 +818,6 @@ def _committed_schema(man_or_json) -> T.StructType:
     return T.StructType.fromJson(json.loads(j))
 
 
-#: table-relative path of the file a scanned row came from, derived
-#: from the parquet reader's _metadata the same way on the DV WRITE
 def _col_mapping(man: dict) -> dict:
     """The manifest's logical→PHYSICAL column-name mapping (Delta's
     columnMapping 'name' mode): empty for every table that never ran
@@ -932,14 +933,74 @@ def _to_physical(df: DataFrame, mapping: dict) -> DataFrame:
     ])
 
 
-#: side and the DV APPLY side, so the anti-join key is consistent by
-#: construction whatever the table root or its percent-encoding looks
-#: like (data dirs are hex-named — '/data/' cannot recur below root)
+def _file_key(p):
+    """A data file's identity as deletion vectors record it: ``data/``
+    plus whatever follows the LAST ``/data/`` of the path. One rule for
+    both spellings — a Spark ``Column`` (the parquet reader's
+    ``_metadata.file_path`` URI, on the DV write and apply sides) and a
+    ``str`` (a manifest's table-relative path, when DV target sets are
+    matched in Python) — so the two can never disagree, whatever
+    the table root or its percent-encoding looks like (data dirs are
+    hex-named: ``/data/`` cannot recur below the root)."""
+    if isinstance(p, str):
+        return "data/" + ("/" + p).rsplit("/data/", 1)[-1]
+    return F.concat(F.lit("data/"), F.substring_index(p, "/data/", -1))
+
+
 def _rel_file_expr() -> F.Column:
-    return F.concat(
-        F.lit("data/"),
-        F.substring_index(F.col("_metadata.file_path"), "/data/", -1),
-    )
+    return _file_key(F.col("_metadata.file_path"))
+
+
+#: the columns of every DV file, passed to the apply-side read so it
+#: never runs a schema-inference job
+_DV_SCHEMA = "__file__ string, __pos__ bigint"
+
+
+@functools.lru_cache(maxsize=4096)
+def _dv_targets_at(abs_path: str) -> frozenset:
+    # DV files are immutable and uniquely named, so the path is a sound
+    # key; a failed read raises and so is never cached
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(abs_path, columns=["__file__"],
+                        read_dictionary=["__file__"]).column(0)
+    return frozenset(v for chunk in col.chunks
+                     for v in chunk.dictionary.to_pylist())
+
+
+def _dv_targets(path: str, rel: str) -> frozenset | None:
+    """The file keys (``_file_key``) of the data files whose rows DV
+    file ``rel`` masks — its dictionary-encoded ``__file__`` column,
+    read once per process with pyarrow. ``None`` when unreadable: the
+    caller must then treat the DV as masking every file."""
+    try:
+        return _dv_targets_at(os.path.join(path, rel))
+    except Exception:
+        return None
+
+
+def _live_dvs(path: str, dvs, files) -> list[str]:
+    """The DV files of ``dvs`` that mask a row of ``files`` (or whose
+    target set is unreadable). A DV whose targets all left ``files`` —
+    rewritten by a merge, CDC apply, CoW delete or compaction — masks
+    nothing there: reads skip it and ``_commit`` retires it."""
+    if not dvs:
+        return []
+    keys = {_file_key(f) for f in files}
+    return [rel for rel in dvs
+            if (t := _dv_targets(path, rel)) is None
+            or not t.isdisjoint(keys)]
+
+
+def _dv_masked(path: str, dvs, files) -> set[str]:
+    """The files of ``files`` that some DV of ``dvs`` masks — all of
+    them when a target set is unreadable. Collecting the DVs' distinct
+    ``__file__`` values answers the same question with a Spark job."""
+    targets = [_dv_targets(path, rel) for rel in dvs or ()]
+    if any(t is None for t in targets):
+        return set(files)
+    masked = frozenset().union(*targets)
+    return {f for f in files if _file_key(f) in masked}
 
 
 def _read_snapshot(
@@ -955,7 +1016,9 @@ def _read_snapshot(
     scan of the manifest's files (optionally a subset / a
     skipping-pruned subset), minus the rows its deletion vectors mask
     (one anti-join on (file, row_index); the DV side is the deleted
-    rows only, so AQE broadcasts it in practice). Bypassing this and
+    rows only, so AQE broadcasts it in practice). Only the DVs whose
+    target sets meet the scanned files join (``_live_dvs``): a scan no
+    DV touches is the plain committed-schema scan. Bypassing this and
     scanning raw files is how merge-on-read systems resurrect deleted
     rows — don't."""
     schema = _committed_schema(man)
@@ -988,16 +1051,15 @@ def _read_snapshot(
     df = spark.read.schema(_phys_schema(schema, mapping)).parquet(
         *[os.path.join(path, rel) for rel in flist]
     )
-    dv_files = man.get("dv_files") or []
+    dv_files = _live_dvs(path, man.get("dv_files"), flist)
     if dv_files or _with_position:
         df = (
             df.withColumn("__file__", _rel_file_expr())
             .withColumn("__pos__", F.col("_metadata.row_index"))
         )
     if dv_files:
-        dv = spark.read.parquet(
-            *[os.path.join(path, rel) for rel in dv_files]
-        ).select("__file__", "__pos__")
+        dv = spark.read.schema(_DV_SCHEMA).parquet(
+            *[os.path.join(path, rel) for rel in dv_files])
         df = df.join(dv, on=["__file__", "__pos__"], how="left_anti")
         if not _with_position:
             df = df.drop("__file__", "__pos__")
@@ -1590,14 +1652,16 @@ def delete_versioned(
     parquet directory — and rewrites NOTHING: cost is O(matched rows),
     not O(touched files). Erasing a user's 1 000 rows from a 100 TB
     table under the rewrite strategy rewrites every 128 MB file any of
-    them sits in; the DV commit writes kilobytes. Every read applies
-    the DVs via one (file, row_index) anti-join (``_read_snapshot`` —
-    the DV side is only the deleted rows, broadcast in practice), and
-    DV lists ride every subsequent commit by inheritance so no
-    maintenance path can resurrect rows. Rewrites eventually absorb
-    tombstones: compaction/clustering write DV-applied data, and
-    ``purge_dvs`` materializes all of them explicitly. Trade-off is
-    the classic MoR one — reads pay the anti-join until a purge; pick
+    them sits in; the DV commit writes kilobytes. A read applies the
+    DVs that mask a file it scans via one (file, row_index) anti-join
+    (``_read_snapshot`` — the DV side is only the deleted rows,
+    broadcast in practice), and LIVE DVs ride every subsequent commit
+    by inheritance so no maintenance path can resurrect rows. Rewrites
+    absorb tombstones: any commit that replaces a DV'd file (merge,
+    CDC apply, CoW delete, compaction, clustering) writes DV-applied
+    data and retires the DVs left masking nothing, and ``purge_dvs``
+    materializes all of them explicitly. Trade-off is the classic MoR
+    one — reads of DV'd files pay the anti-join until a purge; pick
     per delete, mixing strategies on one table is fine."""
     if strategy not in ("rewrite", "merge-on-read"):
         raise ValueError(
@@ -1728,8 +1792,8 @@ def compact_versioned(
         return parent, {"files_compacted": 0, "files_carried": len(files)}
     version = parent + 1
     # DV-applied read: compaction MATERIALIZES the compacted files'
-    # tombstones for free (their stale DV rows then reference dead
-    # paths — harmless, reclaimed by purge/vacuum)
+    # tombstones for free, and the commit retires every DV left
+    # masking none of the new version's files (_commit's inheritance)
     df = _read_snapshot(spark, path, prev, files=small)
     total = sum(os.path.getsize(os.path.join(path, rel)) for rel in small)
     n_out = max(1, int(total // (target_mb * 1024 * 1024)) + 1)
@@ -2128,7 +2192,8 @@ def restore_versioned(path: str, version: int) -> int:
         {"restored_from": version,
          "column_mapping": _col_mapping(target),
          "retired_columns": target.get("retired_columns") or []},
-        dvs=list(target.get("dv_files", [])),  # the state being restored
+        # the state being restored
+        dvs=_live_dvs(path, target.get("dv_files"), target["files"]),
     )
 
 
@@ -2983,18 +3048,15 @@ def purge_dvs(spark: SparkSession, path: str) -> tuple[int, dict]:
     if not dv_files:
         return parent, {"files_rewritten": 0, "files_carried": len(files),
                         "dv_files_purged": 0}
-    dv = spark.read.parquet(
-        *[os.path.join(path, rel) for rel in dv_files])
-    tombstoned = {r[0] for r in dv.select("__file__").distinct().collect()}
-    affected = sorted(tombstoned & set(files))
-    carried = [f for f in files if f not in set(affected)]
+    affected = _dv_masked(path, dv_files, files)
+    carried = [f for f in files if f not in affected]
     if not affected:
         # every DV entry references a file no longer in the list
         v = _commit(path, "purge", files, prev["schema"], parent, dvs=[])
         return v, {"files_rewritten": 0, "files_carried": len(files),
                    "dv_files_purged": len(dv_files)}
     version = parent + 1
-    rewritten = _read_snapshot(spark, path, prev, files=affected)
+    rewritten = _read_snapshot(spark, path, prev, files=sorted(affected))
     # purge rewrite size is bounded by the affected files (survivors
     # ⊆ affected rows) — same right-sizing as the MERGE/CDC writes
     new_files = _write_data_dir(rewritten, path, version,
@@ -3147,8 +3209,8 @@ def metadata_ndv(
     data scans (no session parameter, by construction). Provability
     rules match the column-stats ones: every referenced file must have
     a same-precision register array for the column (None otherwise),
-    and any deletion vector refuses the estimate (HLL cannot subtract
-    a masked row — run ``purge_dvs`` first). Standard error is
+    and any live deletion vector refuses the estimate (HLL cannot
+    subtract a masked row — run ``purge_dvs`` first). Standard error is
     1.04/sqrt(2^p) ≈ 1.6% at the default precision; the small range
     uses linear counting and is tighter. Returns ``{col: float|None}``.
     """
@@ -3157,9 +3219,9 @@ def metadata_ndv(
         raise FileNotFoundError(f"no versioned table at {path}")
     man = _read_manifest(path, v)
     out: dict = {c: None for c in cols}
-    if man.get("dv_files"):
-        return out  # masked rows can't be subtracted from a sketch
     files = list(man["files"])
+    if _live_dvs(path, man.get("dv_files"), files):
+        return out  # masked rows can't be subtracted from a sketch
     per_dir: dict[str, dict | None] = {}
     mapping = _col_mapping(man)
     import base64
@@ -3232,14 +3294,16 @@ def metadata_aggregate(
 
     - ``count``: manifest footer-row total minus DV-masked rows. DV
       directories are small by design (O(deleted rows)), so their
-      footers are a driver-side read; a DV row whose target file left
-      the manifest (compacted away) no longer masks anything and is
-      excluded by a content read of the (small) DV files.
+      footers are read without a Spark job. A DV whose target set
+      misses every file of the version (``_live_dvs``) is skipped
+      unread; a live DV's rows whose target file left the manifest
+      mask nothing and are excluded by a content read of the (small)
+      DV files.
     - per-column ``min``/``max``: fold of the per-file sidecar bounds —
       exact only when EVERY referenced file has usable bounds (or is
-      provably all-NULL) for the column AND no DV touches the table
-      (a masked row could be the extremum; parquet stats ignore NULLs,
-      matching SQL MIN/MAX).
+      provably all-NULL) for the column AND no live DV touches the
+      version (a masked row could be the extremum; parquet stats
+      ignore NULLs, matching SQL MIN/MAX).
     - per-column ``non_null``: rows minus the null-count fold, same
       provability rules.
 
@@ -3250,14 +3314,13 @@ def metadata_aggregate(
         raise FileNotFoundError(f"no versioned table at {path}")
     man = _read_manifest(path, v)
     files = list(man["files"])
-    file_set = set(files)
     out: dict = {"version": v, "count": None,
                  "cols": {c: {"min": None, "max": None,
                               "non_null": None} for c in (cols or [])}}
     total = man.get("rows")
     if total is None:
         total = _footer_rows(path, files)
-    dv_files = man.get("dv_files") or []
+    dv_files = _live_dvs(path, man.get("dv_files"), files)
     dv_masked = 0
     if dv_files and total is not None:
         try:
@@ -3274,15 +3337,16 @@ def metadata_aggregate(
                                   columns=["__file__", "__pos__"])
                 seen.update(zip(t["__file__"].to_pylist(),
                                 t["__pos__"].to_pylist()))
-            dv_masked = sum(1 for f, _pos in seen if f in file_set)
+            file_keys = {_file_key(f) for f in files}
+            dv_masked = sum(1 for f, _pos in seen if f in file_keys)
         except Exception:
             total = None  # unreadable DV: count not provable
     if total is not None:
         out["count"] = total - dv_masked
     if not cols:
         return out
-    # per-column bounds fold (DV-free tables only — a masked row could
-    # be the extremum, so any DV makes column stats unprovable)
+    # per-column bounds fold (no live DV only — a masked row could be
+    # the extremum, so any live DV makes column stats unprovable)
     if dv_files:
         return out
     per_dir: dict[str, dict | None] = {}
@@ -3348,7 +3412,8 @@ def metadata_count_where(
     LOGICAL rows, so ``rows - tombstones`` bounds it above — and
     equals it exactly when the file is all-match. Tombstones whose
     target file was pruned out (or compacted away) mask nothing this
-    count can see and never loosen the bounds, so a DV-bearing table
+    count can see and never loosen the bounds — a DV whose target set
+    misses every kept file is not even read — so a DV-bearing table
     whose tombstones all sit in excluded files still resolves exact.
     A kept file with no usable sidecar makes ``count_max`` None (its
     size is unknown); unreadable DV files make both bounds trivial."""
@@ -3361,19 +3426,19 @@ def metadata_count_where(
     where = _phys_where(_col_mapping(man), where)
     kept = set(filestats.prune_files(path, files, where))
     dv_per_file: dict[str, int] = {}
-    if man.get("dv_files"):
+    dv_files = _live_dvs(path, man.get("dv_files"), kept)
+    if dv_files:
         try:
             import pyarrow.parquet as pq
 
             seen: set = set()
-            for rel in man["dv_files"]:
+            for rel in dv_files:
                 t = pq.read_table(os.path.join(path, rel),
                                   columns=["__file__", "__pos__"])
                 seen.update(zip(t["__file__"].to_pylist(),
                                 t["__pos__"].to_pylist()))
             for f, _pos in seen:
-                if f in kept:
-                    dv_per_file[f] = dv_per_file.get(f, 0) + 1
+                dv_per_file[f] = dv_per_file.get(f, 0) + 1
         except Exception:
             # unreadable DV sidecars: masked-row placement unknown —
             # no sound bound in either direction
@@ -3392,7 +3457,7 @@ def metadata_count_where(
         if st is None or "rows" not in st:
             cmax = None  # unknown file size: no upper bound
             continue
-        logical = max(0, st["rows"] - dv_per_file.get(rel, 0))
+        logical = max(0, st["rows"] - dv_per_file.get(_file_key(rel), 0))
         if cmax is not None:
             cmax += logical
         if filestats._file_all_match(st, where):
@@ -3998,19 +4063,12 @@ def diff_versions(
         # a shared file's contribution differs between the versions
         # ONLY if a DV file present in exactly one of them references
         # it (DV files are immutable and carried by reference, so the
-        # common DV files tombstone identically on both sides). Read
-        # the DELTA DV files — small by construction, they hold the
-        # deletes between the versions — to find exactly which shared
-        # files lose cancellation; everything else stays O(files that
+        # common DV files tombstone identically on both sides). The
+        # DELTA DV files' target sets name exactly which shared files
+        # lose cancellation; everything else stays O(files that
         # differ), not O(corpus).
-        delta = sorted(dva ^ dvb)
-        affected = {
-            r[0]
-            for r in spark.read.parquet(
-                *[os.path.join(path, rel) for rel in delta]
-            ).select("__file__").distinct().collect()
-        }
-        shared_cancel = (fa & fb) - affected
+        shared = fa & fb
+        shared_cancel = shared - _dv_masked(path, dva ^ dvb, shared)
     a_side = fa - shared_cancel
     b_side = fb - shared_cancel
 

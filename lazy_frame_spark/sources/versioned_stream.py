@@ -38,7 +38,9 @@ earlier batches — a stream cannot retract delivered rows, so DV
 commits (action ``delete`` with merge-on-read) fail the chain like any
 other destructive action even though the FILE list stays identical:
 ``partitions()`` tracks the manifest's ``dv_files`` across the version
-walk and raises on any change. Consumers that need retractions stream
+walk and raises on any change that can move a row of a current file
+(a commit that only retires DVs masking none of its files moves
+none). Consumers that need retractions stream
 a ``relay_changes`` feed instead (``versioned.relay_changes`` — the
 change feed is append-only by construction, so this source can tail
 it; upstream deletes arrive as D op rows), or read ``diff_versions``
@@ -339,14 +341,17 @@ class VersionedStreamReader(DataSourceStreamReader):
                 )
             cur = set(man["files"])
             cur_dvs = set(man.get("dv_files") or [])
-            if cur_dvs != prev_dvs:
+            if cur_dvs - prev_dvs or V._live_dvs(
+                    self.path, prev_dvs - cur_dvs, cur):
                 # a merge-on-read delete keeps the FILE list identical
                 # (only dv_files grows, versioned.py delete_versioned)
                 # — but it masks rows in files already emitted by
-                # earlier batches, which a stream cannot retract. Any
-                # DV change is therefore as destructive to the chain
-                # as a rewrite; an inherited-unchanged DV list (carried
-                # by reference across appends) is fine.
+                # earlier batches, which a stream cannot retract. An
+                # added DV, or a dropped one still targeting a current
+                # file (a restore un-deleting rows), is therefore as
+                # destructive to the chain as a rewrite; an inherited-
+                # unchanged DV list, or a commit retiring DVs that mask
+                # none of its files (versioned._live_dvs), is fine.
                 raise ValueError(
                     f"versioned stream source: version {v} changed the "
                     "table's deletion vectors (merge-on-read delete) — "

@@ -42,6 +42,20 @@ def _same(a, b):
             and a.count() == b.count())
 
 
+def _jobs(spark, fn):
+    """Spark jobs ``fn()`` starts, counted through its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"lfs-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "deletion-vector scoping test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 class TestSkippingRead:
     def test_sidecar_written_per_commit(self, table):
         dirs = [d for d in os.listdir(os.path.join(table, "data"))
@@ -967,6 +981,172 @@ class TestDiffDvPruning:
         assert d.count() == n
         assert {r["change_type"] for r in
                 d.select("change_type").distinct().collect()} == {"delete"}
+
+    def test_diff_planning_runs_no_job(self, spark, tmp_path):
+        """The delta DVs' target sets come from their own dictionary
+        column, read with pyarrow: planning the diff across one MoR
+        delete runs no Spark job."""
+        t = str(tmp_path / "dvdiffjobs")
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        V.write_versioned(o.repartitionByRange(8, "o_orderkey"), t)  # v1
+        V.delete_versioned(spark, t, "o_orderkey BETWEEN 0 AND 60",
+                           strategy="merge-on-read")              # v2
+        n_jobs, d = _jobs(spark, lambda: V.diff_versions(spark, t, 1, 2))
+        assert n_jobs == 0
+        assert d.count() == o.filter(
+            F.col("o_orderkey").between(0, 60)).count()
+
+
+class TestDvScoping:
+    """Each deletion vector masks an exact set of data files (its own
+    ``__file__`` column): reads join only the DVs meeting the files
+    they scan, and a commit that replaces every file a DV masks
+    retires it from the new manifest."""
+
+    @staticmethod
+    def _table(spark, t):
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        V.write_versioned(o.repartitionByRange(4, "o_orderkey"), t)
+        # keys 0..1499: the deleted rows all sit in the first file
+        vd, st = V.delete_versioned(spark, t, "o_orderkey < 200",
+                                    strategy="merge-on-read")
+        assert st["rows_deleted"] > 0
+        return o, vd
+
+    @staticmethod
+    def _merge_over_dv(spark, t, o):
+        """A merge whose keys sit in the DV'd file: it rewrites it."""
+        src = (o.filter(F.col("o_orderkey").between(200, 300))
+               .withColumn("o_totalprice", F.lit(5.0)))
+        return (*V.merge_versioned(spark, t, src, "o_orderkey"), src)
+
+    def test_pruned_read_without_live_dv_is_a_plain_scan(
+            self, spark, tmp_path):
+        t = str(tmp_path / "scope_read")
+        o, _ = self._table(spark, t)
+        where = [("o_orderkey", ">=", 1200)]
+        kept = V.skipping_summary(t, where)["kept"]
+        assert kept
+        (dv,) = V._read_manifest(t, V.latest_version(t))["dv_files"]
+        assert not V._dv_targets(t, dv) & set(kept)
+        got = V.read_versioned(spark, t, where=where)
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan
+        assert not any("-dv-" in p for p in got.inputFiles())
+        assert got.columns == ["o_orderkey", "o_totalprice"]
+        assert got.count() > 0
+        assert _same(got, o.filter(F.col("o_orderkey") >= 1200))
+        # a pruned read that does scan the DV'd file still masks
+        low = V.read_versioned(spark, t, where=[("o_orderkey", "<", 300)])
+        assert any("-dv-" in p for p in low.inputFiles())
+        assert _same(low, o.filter(F.col("o_orderkey").between(200, 299)))
+
+    def test_rewrite_retires_dv_and_vacuum_reclaims_it(
+            self, spark, tmp_path):
+        t = str(tmp_path / "scope_retire")
+        o, vd = self._table(spark, t)
+        vm, st, src = self._merge_over_dv(spark, t, o)
+        assert st["files_rewritten"] == 1
+        assert not V._read_manifest(t, vm).get("dv_files")
+        exp = (o.filter(F.col("o_orderkey") >= 200)
+               .join(src.select("o_orderkey"), "o_orderkey", "left_anti")
+               .unionByName(src))
+        assert _same(V.read_versioned(spark, t), exp)
+        # the delete's own version keeps its DV: time travel is exact
+        at_delete = V.read_versioned(spark, t, version=vd)
+        assert _same(at_delete, o.filter(F.col("o_orderkey") >= 200))
+        V.vacuum_versioned(t, keep_last=1)
+        assert [d for d in os.listdir(os.path.join(t, "data"))
+                if "-dv-" in d] == []
+        assert _same(V.read_versioned(spark, t), exp)
+
+    def test_unreadable_target_set_masks_every_file(
+            self, spark, tmp_path, monkeypatch):
+        t = str(tmp_path / "scope_unreadable")
+        o, _ = self._table(spark, t)
+
+        def unreadable(_abs_path):
+            raise OSError("target set unreadable")
+
+        monkeypatch.setattr(V, "_dv_targets_at", unreadable)
+        got = V.read_versioned(spark, t, where=[("o_orderkey", ">=", 1200)])
+        assert any("-dv-" in p for p in got.inputFiles())
+        assert _same(got, o.filter(F.col("o_orderkey") >= 1200))
+        # a rewrite of the DV'd file cannot prove the DV dead: kept
+        vm, _, _ = self._merge_over_dv(spark, t, o)
+        assert V._read_manifest(t, vm).get("dv_files")
+        assert V.read_versioned(spark, t).filter(
+            F.col("o_orderkey") < 200).count() == 0
+
+    def test_table_rooted_under_a_data_dir_keeps_live_dvs(
+            self, spark, tmp_path):
+        t = str(tmp_path / "data" / "t")
+        o, _ = self._table(spark, t)
+        (dv,) = V._read_manifest(t, V.latest_version(t))["dv_files"]
+        low_files = V.skipping_summary(
+            t, [("o_orderkey", "<", 200)])["kept"]
+        assert V._dv_targets(t, dv) == set(low_files)
+        # a merge that rewrites a file the DV does NOT mask keeps it
+        src = (o.filter(F.col("o_orderkey") > 1300)
+               .withColumn("o_totalprice", F.lit(5.0)))
+        vm, st = V.merge_versioned(spark, t, src, "o_orderkey")
+        assert st["files_rewritten"] >= 1
+        assert V._read_manifest(t, vm)["dv_files"] == [dv]
+        assert V.read_versioned(spark, t).filter(
+            F.col("o_orderkey") < 200).count() == 0
+        assert V.read_versioned(spark, t, where=[
+            ("o_orderkey", "<", 200)]).count() == 0
+
+    def test_stream_source_fails_across_a_retiring_rewrite(
+            self, spark, tmp_path):
+        from lazy_frame_spark.sources.versioned_stream import (
+            VersionedStreamReader,
+        )
+
+        t = str(tmp_path / "scope_stream")
+        o, vd = self._table(spark, t)
+        vm, _, _ = self._merge_over_dv(spark, t, o)
+        assert not V._read_manifest(t, vm).get("dv_files")
+        r = VersionedStreamReader({"path": t})
+        with pytest.raises(ValueError, match="append-only chain"):
+            r.partitions({"version": vd}, {"version": vm})
+
+    def test_stream_source_tells_retired_dvs_from_undeletes(
+            self, spark, tmp_path):
+        """An append that retires a dead DV (one a table written before
+        DV scoping still lists) moves no row and streams on; a restore
+        that drops a DV still masking a current file un-deletes rows
+        and fails the chain."""
+        from lazy_frame_spark.sources.versioned_stream import (
+            VersionedStreamReader,
+        )
+
+        t = str(tmp_path / "scope_stream_dead")
+        o, vd = self._table(spark, t)
+        (dv,) = V._read_manifest(t, vd)["dv_files"]
+        vm, _, _ = self._merge_over_dv(spark, t, o)
+        man = V._read_manifest(t, vm)
+        v_dead = V._commit(t, "alter", man["files"], man["schema"], vm,
+                           dvs=[dv])  # a stale DV, as older commits kept
+        v_app = V.append_versioned(
+            o.filter(F.col("o_orderkey") < 5).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 10_000), t)
+        man_app = V._read_manifest(t, v_app)
+        assert not man_app.get("dv_files")
+        appended = set(man_app["files"]) - set(man["files"])
+        parts = VersionedStreamReader({"path": t}).partitions(
+            {"version": v_dead}, {"version": v_app})
+        assert len(parts) == len(appended) > 0
+        # restoring the pre-delete version keeps the file list and
+        # drops a DV that masks one of those files: rows come back
+        t2 = str(tmp_path / "scope_stream_undo")
+        _, vd2 = self._table(spark, t2)
+        v_undo = V.restore_versioned(t2, vd2 - 1)
+        assert (V._read_manifest(t2, v_undo)["files"]
+                == V._read_manifest(t2, vd2)["files"])
+        with pytest.raises(ValueError, match="deletion vectors"):
+            VersionedStreamReader({"path": t2}).partitions(
+                {"version": vd2}, {"version": v_undo})
 
 
 class TestApplyCdc:

@@ -3,8 +3,14 @@
 Opens two generated CSVs with the default cached open, a 5-column and a
 27-column one (the reference's medium schema), builds the row index, and
 prints, per call, the py4j call (``c``) commands and all commands it
-sends, plus the Spark jobs it starts. A call whose count grows with the
-frame's width builds one ``Column`` per field somewhere on its path.
+sends, the Spark jobs it starts, the classes it compiles with Janino
+(the count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``) and
+its wall time. A
+call whose py4j count grows with the frame's width builds one ``Column``
+per field somewhere on its path. Spark inlines primitive literals into
+generated code and caches compiled classes by their source, so a call
+repeated with the same literals compiles nothing; the ``fresh`` rows
+change a literal on every call and pay the compile each time.
 Read-only observability: it never changes what a call computes.
 
 Usage: python tools/py4j_calls.py [--rows N]
@@ -14,10 +20,12 @@ from __future__ import annotations
 
 import argparse
 import collections
+import itertools
 import os
 import random
 import sys
 import tempfile
+import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -60,39 +68,55 @@ def main() -> None:
 
     client.send_command = counting
 
-    def measure(fn) -> tuple[int, int, int]:
+    compile_time = (spark._jvm.org.apache.spark.metrics.source
+                    .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def measure(fn) -> tuple[int, int, int, int, float]:
         fn()  # the first call of a shape pays one-time lookups
         group = f"py4j-calls-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "py4j_calls")
+        compiled = compile_time.getCount()
         sent.clear()
+        t0 = time.perf_counter()
         try:
             fn()
+            ms = (time.perf_counter() - t0) * 1000
             calls, total = sent["c"], sum(sent.values())
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        return calls, total, len(sc.statusTracker().getJobIdsForGroup(group))
+        compiled = compile_time.getCount() - compiled
+        return (calls, total,
+                len(sc.statusTracker().getJobIdsForGroup(group)), compiled, ms)
 
     with tempfile.TemporaryDirectory() as d:
-        print(f"{'frame':>6} {'call':32} {'py4j_c':>6} {'all':>5} {'jobs':>4}")
+        print(f"{'frame':>6} {'call':34} {'py4j_c':>6} {'all':>5} "
+              f"{'jobs':>4} {'compiled':>8} {'ms':>7}")
         for wide in (False, True):
             path = os.path.join(d, f"w{wide:d}.csv")
             _write_csv(path, args.rows, wide)
             lf = LazyFrame.open(spark, path)
             lf.row_range(1, 2).to_pandas()  # builds the index
             c0 = lf.columns[-5]
+            fresh = itertools.count(100)
             calls = {
                 "row_range(11, 60).to_pandas()": lambda: lf.row_range(11, 60).to_pandas(),
+                "row_range(fresh).to_pandas()": lambda: (
+                    lambda k: lf.row_range(k, k + 49).to_pandas())(next(fresh)),
                 "rows(20 points).to_pandas()": lambda: lf.rows(range(3, 400, 20)).to_pandas(),
                 "head(6).to_pandas()": lambda: lf.head(6).to_pandas(),
                 "tail(6).to_pandas()": lambda: lf.tail(6).to_pandas(),
                 "which(c > 0, collect=True)": lambda: lf.which(c0, ">", 0, collect=True),
                 "filter(c < -990).select(3)": lambda: lf.filter(c0, "<", -990)
                 .select(lf.columns[:3]).to_pandas(),
+                "filter(c < fresh).select(3)": lambda: lf.filter(
+                    c0, "<", -1001 - next(fresh))
+                .select(lf.columns[:3]).to_pandas(),
                 "nrow()": lf.nrow,
             }
             for name, fn in calls.items():
-                c, total, jobs = measure(fn)
-                print(f"{len(lf.columns):>4}col {name:32} {c:>6} {total:>5} {jobs:>4}")
+                c, total, jobs, compiled, ms = measure(fn)
+                print(f"{len(lf.columns):>4}col {name:34} {c:>6} {total:>5} "
+                      f"{jobs:>4} {compiled:>8} {ms:>7.1f}")
             lf.close()
     client.send_command = send
     spark.stop()
