@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from lazy_frame_spark.functions.compare import OPS, typed_compare
 from lazy_frame_spark.metadata import ColumnAttrs
+from lazy_frame_spark.pins import release
 from lazy_frame_spark.rowid import (
     ROW_ID,
     enumerate_rows,
@@ -387,10 +388,7 @@ class LazyFrame:
 
         bad, n = self._count_corrupt(df)
         if bad:
-            try:
-                (handle or df).unpersist()
-            except Exception:
-                pass
+            release(handle or df)
             self._verify_df = None
             if self._reopen_full is None:
                 raise ValueError(
@@ -407,10 +405,7 @@ class LazyFrame:
     def close(self) -> None:
         """Release any persisted state (M7 finalizer parity,
         R/lazy.frame.R:12-15)."""
-        try:
-            (self._cache_handle or self._df).unpersist()
-        except Exception:
-            pass
+        release(self._cache_handle or self._df)
         self._cache_handle = None
 
     # ------------------------------------------------------------------ #

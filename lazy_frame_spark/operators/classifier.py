@@ -35,6 +35,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lazy_frame_spark.pins import pin_scope
+
 __all__ = ["train_logreg", "logreg_score"]
 
 
@@ -88,8 +90,8 @@ def train_logreg(
         n = feats.count()
         if n > train_max_rows:
             feats = feats.sample(train_max_rows / n, seed=seed)
-    feats = feats.persist()
-    try:
+    with pin_scope() as pin:
+        feats = pin(feats)
         n_rows = feats.count()  # also materializes the persist
         if n_rows == 0:
             raise ValueError("no labeled rows to train on")
@@ -135,8 +137,6 @@ def train_logreg(
             w = [w[i] - lr * (float(row[f"g{i}"]) + l2 * w[i])
                  for i in range(d)]
             b -= lr * float(row["gb"])
-    finally:
-        feats.unpersist()
     return {
         "weights": w,
         "bias": b,

@@ -35,6 +35,7 @@ from lazy_frame_spark.operators.text import (
     normalized_fingerprint,
     tokens,
 )
+from lazy_frame_spark.pins import PinRegistry
 
 #: MinHash modulus: prime just above 2^32. Token hashes are reduced mod P
 #: first so a*h + b stays < 2^62 — no BIGINT overflow in either engine.
@@ -68,32 +69,16 @@ def simhash_band_widths(max_hamming: int) -> list[int]:
     return [base + 1] * rem + [base] * (n_bands - rem)
 
 
-#: persisted sketch frames, keyed by operator — each new invocation
-#: replaces (and unpersists) its predecessor so long-lived sessions don't
-#: accumulate cached blocks; ``release_sketches()`` drops them all.
-_SKETCH_PINS: dict[str, DataFrame] = {}
-
-
-def _pin(key: str, df: DataFrame) -> DataFrame:
-    prev = _SKETCH_PINS.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _SKETCH_PINS[key] = df.persist()
-    return _SKETCH_PINS[key]
+#: persisted sketch frames, keyed by operator: a repeat call replaces
+#: its predecessor's pin; ``release_sketches()`` drops them all
+_sketches = PinRegistry()
 
 
 def release_sketches() -> None:
     """Unpersist every sketch frame pinned by the dedup operators (and a
     large doomed-id set pinned by ``semantic_dedup_against``). Results
     derived from a released sketch stay correct — they just recompute."""
-    for key in list(_SKETCH_PINS):
-        try:
-            _SKETCH_PINS.pop(key).unpersist()
-        except Exception:
-            pass
+    _sketches.release_all()
 
 
 def token_hash(token: Column) -> Column:
@@ -302,7 +287,8 @@ def minhash_candidate_pairs(
     ``max_bucket_size`` caps degenerate LSH buckets before the pair join
     (see ``_prune_hot_buckets``) — the guard against the one quadratic
     hazard in this plan; ``None`` keeps exact historical semantics."""
-    sig = _pin("minhash_sig", minhash_signatures(df, text_col, id_col, shingle_n))
+    sig = _sketches.pin(
+        "minhash_sig", minhash_signatures(df, text_col, id_col, shingle_n))
     # carry the signature THROUGH the band explode: the est-Jaccard is
     # computable on the candidate row itself — two shuffles total (band
     # join + pair dedup) instead of four (join + distinct + two re-joins)
@@ -382,7 +368,7 @@ def simhash_pairs(
     join (``_prune_hot_buckets``); note that with the cap set, recall is
     100% only for pairs not confined to dropped buckets — the intended
     trade (the dropped cohort is the empty/boilerplate pile)."""
-    sh = _pin("simhash_sketch", simhash(df, text_col, id_col))
+    sh = _sketches.pin("simhash_sketch", simhash(df, text_col, id_col))
     widths = simhash_band_widths(max_hamming)
     offsets = [sum(widths[:i]) for i in range(len(widths))]
     chunks = F.array(
@@ -640,7 +626,8 @@ def incremental_near_dups(
     For a standing pipeline this matters doubly: a boilerplate bucket in
     the corpus signature table is re-joined by EVERY future batch.
     """
-    new_sig = _pin("incremental_sig", minhash_signatures(new_docs, text_col, id_col))
+    new_sig = _sketches.pin(
+        "incremental_sig", minhash_signatures(new_docs, text_col, id_col))
     ba = _banded_signatures(new_sig, id_col)
     bb_ = _banded_signatures(existing_signatures, id_col)
     if max_bucket_size is not None:
@@ -733,7 +720,7 @@ def duplicate_ngram_spans(
     # under the sketch-lifecycle registry (release_sketches() frees it;
     # a repeat call replaces it), spillable MEMORY_AND_DISK, so the
     # tokenize/hash pass runs exactly once.
-    g = _pin(
+    g = _sketches.pin(
         "ngram_span_grams",
         positional_ngrams(df, n=n, text_col=text_col, id_col=id_col),
     )

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lazy_frame_spark.pins import pin_scope
+
 COUNT_COL = "__n__"
 
 #: default bounded-extreme buffer width: the view keeps the 8 smallest
@@ -706,54 +708,47 @@ def join_view_update(
     # each delta feeds up to THREE evaluations (the folded probe
     # aggregate, its snapshot-join term, the dA⋈dB term) — pin it for
     # the update's duration so the delta files are scanned once, not
-    # per consumer. O(increment) state, released before returning.
-    dA = V.appended_since(spark, a_path, va0, version=va1).persist()
-    dB = V.appended_since(spark, b_path, vb0, version=vb1).persist()
-    # ONE probe job per delta: count (the emptiness gate) + key bounds
-    # + approx NDV ride the same aggregate (_jv_probe_delta) — the old
-    # shape paid a capped count, then an approx gate, then a bounds
-    # aggregate, each its own pass over the delta
-    n_da, probe_a = _jv_probe_delta(dA, keys)
-    n_db, probe_b = _jv_probe_delta(dB, keys)
-    stats = {"a_from": va0, "a_to": va1, "b_from": vb0, "b_to": vb1}
-    if n_da == 0 and n_db == 0:
-        dA.unpersist()
-        dB.unpersist()
-        stats["view_version"] = V.latest_version(view_path)
-        return stats
-    parts = []
-    if n_da:
-        w = _jv_where_from_probe(dA, keys, probe_a)
-        if w is not None:
-            s = V.skipping_summary(b_path, w, version=vb0)
-            stats["b0_files_kept"] = s["kept_files"]
-            stats["b0_files_total"] = s["total_files"]
-        b0 = V.read_versioned(spark, b_path, version=vb0, where=w)
-        parts.append(dA.join(b0, on=keys, how="inner"))
-    if n_db:
-        w = _jv_where_from_probe(dB, keys, probe_b)
-        if w is not None:
-            s = V.skipping_summary(a_path, w, version=va0)
-            stats["a0_files_kept"] = s["kept_files"]
-            stats["a0_files_total"] = s["total_files"]
-        a0 = V.read_versioned(spark, a_path, version=va0, where=w)
-        parts.append(a0.join(dB, on=keys, how="inner"))
-    if n_da and n_db:
-        parts.append(dA.join(dB, on=keys, how="inner"))
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p)
-    view_cols = V.read_versioned(spark, view_path).columns
-    # ONE commit carries the delta AND the new state — atomic by the
-    # manifest publish, so a crash before it leaves the old state and
-    # the retry recomputes the identical delta (no double-apply)
-    try:
+    # per consumer. O(increment) state, released on every exit.
+    with pin_scope() as pin:
+        dA = pin(V.appended_since(spark, a_path, va0, version=va1))
+        dB = pin(V.appended_since(spark, b_path, vb0, version=vb1))
+        # ONE probe job per delta: count (the emptiness gate) + key
+        # bounds + approx NDV ride the same aggregate (_jv_probe_delta)
+        n_da, probe_a = _jv_probe_delta(dA, keys)
+        n_db, probe_b = _jv_probe_delta(dB, keys)
+        stats = {"a_from": va0, "a_to": va1, "b_from": vb0, "b_to": vb1}
+        if n_da == 0 and n_db == 0:
+            stats["view_version"] = V.latest_version(view_path)
+            return stats
+        parts = []
+        if n_da:
+            w = _jv_where_from_probe(dA, keys, probe_a)
+            if w is not None:
+                s = V.skipping_summary(b_path, w, version=vb0)
+                stats["b0_files_kept"] = s["kept_files"]
+                stats["b0_files_total"] = s["total_files"]
+            b0 = V.read_versioned(spark, b_path, version=vb0, where=w)
+            parts.append(dA.join(b0, on=keys, how="inner"))
+        if n_db:
+            w = _jv_where_from_probe(dB, keys, probe_b)
+            if w is not None:
+                s = V.skipping_summary(a_path, w, version=va0)
+                stats["a0_files_kept"] = s["kept_files"]
+                stats["a0_files_total"] = s["total_files"]
+            a0 = V.read_versioned(spark, a_path, version=va0, where=w)
+            parts.append(a0.join(dB, on=keys, how="inner"))
+        if n_da and n_db:
+            parts.append(dA.join(dB, on=keys, how="inner"))
+        delta = parts[0]
+        for p in parts[1:]:
+            delta = delta.unionByName(p)
+        view_cols = V.read_versioned(spark, view_path).columns
+        # ONE commit carries the delta AND the new state — atomic by the
+        # manifest publish, so a crash before it leaves the old state
+        # and the retry recomputes the identical delta (no double-apply)
         stats["view_version"] = V.append_versioned(
             delta.select(*view_cols), view_path,
             extra={"jv_on": keys, "jv_a_version": va1,
                    "jv_b_version": vb1},
         )
-    finally:
-        dA.unpersist()
-        dB.unpersist()
     return stats

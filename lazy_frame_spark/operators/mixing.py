@@ -63,38 +63,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from lazy_frame_spark.pins import PinRegistry
 from lazy_frame_spark.rowid import with_row_ids
 
 #: basis-point denominator for acceptance sampling
 BP = 10_000
 
-#: persisted k-row rate intermediates keyed by purpose — the dedup
-#: sketch-pin pattern: each new call replaces (and unpersists) the
-#: previous pin, and release_rate_tables() frees everything, so
-#: long-lived sessions never accumulate cached blocks
-_RATE_PINS: dict[str, DataFrame] = {}
-
-
-def _pin(key: str, df: DataFrame) -> DataFrame:
-    prev = _RATE_PINS.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    _RATE_PINS[key] = df.persist()
-    return _RATE_PINS[key]
+#: persisted k-row rate intermediates keyed by purpose: a repeat call
+#: replaces the previous pin; release_rate_tables() frees everything
+_rate_tables = PinRegistry()
 
 
 def release_rate_tables() -> None:
     """Unpersist every counts frame pinned by the mixing operators
     (mirror of dedup.release_sketches). Rate tables derived from a
     released pin stay correct — they just recompute."""
-    for key in list(_RATE_PINS):
-        try:
-            _RATE_PINS.pop(key).unpersist()
-        except Exception:
-            pass
+    _rate_tables.release_all()
 
 
 #: Above this many domains, ``sample_by_rates`` abandons the literal
@@ -340,7 +324,7 @@ def temperature_rates(
     # subtrees, so the unpersisted plan scanned the corpus twice for
     # counts). The pin replaces the previous call's block and
     # release_rate_tables() frees it — no per-call accumulation.
-    cw = _pin("temperature_counts", cw)
+    cw = _rate_tables.pin("temperature_counts", cw)
     s = cw.agg(F.min(F.col("__c__") / F.col("__w__")).alias("__s__"))
     return (
         cw.crossJoin(F.broadcast(s))
@@ -413,7 +397,7 @@ def mix_corpora(
     # pinned for the same single-count-scan reason as temperature_rates
     # (the k here is further bounded by the user's target_weights
     # mapping)
-    cw = _pin("corpora_counts", cw)
+    cw = _rate_tables.pin("corpora_counts", cw)
     # s over PRESENT target domains, zeroed if any target domain is
     # absent (its c=0 term would have been the min) — both 1-row aggs
     s = cw.agg(

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lazy_frame_spark.pins import pin_scope
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -598,7 +600,6 @@ def semantic_dedup(
     n_cells: int = 8,
     threshold: float = 0.9,
     index: "IVFIndex | None" = None,
-    persist_cells: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — cluster-scoped
     semantic dedup, the embedding-space stage of an LLM curation
@@ -616,10 +617,8 @@ def semantic_dedup(
     ``n_cells`` with the corpus (the paper ran k=50k clusters on
     100M docs) so cell populations stay task-sized, and pass a
     pre-fit ``index`` (e.g. KMeans||-trained centroids) to skip the
-    deterministic pick's count. ``persist_cells=True`` caches the
-    assigned frame so the self-join's two sides don't each re-run the
-    argmax — worth it at large n_cells. Survivors are returned with
-    their original columns via one left_anti on the id.
+    deterministic pick's count. Survivors are returned with their
+    original columns via one left_anti on the id.
 
     Cross-cell miss rate, MEASURED (tools/semdedup_recall.py; grid in
     ANN_RECALL.json "semdedup_cross_cell"): on sf0.1 embeddings with
@@ -664,17 +663,6 @@ def semantic_dedup(
     else:
         cells = idx.with_cells(base, vec_col="__sd_v__").withColumn(
             "__sd_n__", norm(F.col("__sd_v__")))
-    if persist_cells:
-        # the self-join evaluates BOTH sides' plans, so the argmax cell
-        # assignment (n_cells interpreted cosines per row) runs twice
-        # per input row. At small n_cells that's minor next to the pair
-        # dots; at large n_cells (the paper's k=50k regime) persist the
-        # assigned frame once instead — the caller trades executor
-        # storage (id + vector + cell + norm per row) for half the
-        # assignment cost, and unpersists via the returned plan's
-        # lifecycle (spark.catalog.clearCache() or a surrounding
-        # persist manager).
-        cells = cells.persist()
     if dim is not None:
         # fixed-width corpus: the quadratic runs as ONE Arrow pass per
         # cell (one BLAS gemm behind a provably-superset screen),
@@ -719,14 +707,14 @@ def _materialized_ids(ids: DataFrame) -> DataFrame:
     """``ids`` evaluated once, for a plan that reads it twice. A small
     set comes back as a local relation, so nothing stays pinned after
     the call. A larger one is persisted in the dedup operators' pin
-    registry (``dedup._pin``): the next call replaces that pin, and
-    ``release_sketches()`` drops it."""
-    from lazy_frame_spark.operators.dedup import _pin
+    registry (``dedup._sketches``): the next call replaces that pin,
+    and ``release_sketches()`` drops it."""
+    from lazy_frame_spark.operators.dedup import _sketches
 
     rows = ids.limit(_DOOMED_LOCAL_MAX + 1).collect()
     if len(rows) <= _DOOMED_LOCAL_MAX:
         return ids.sparkSession.createDataFrame(rows, ids.schema)
-    return _pin("semantic_dedup_against.doomed", ids)
+    return _sketches.pin("semantic_dedup_against.doomed", ids)
 
 
 def semantic_dedup_against(
@@ -737,7 +725,6 @@ def semantic_dedup_against(
     n_cells: int = 8,
     threshold: float = 0.9,
     index: "IVFIndex | None" = None,
-    persist_cells: bool = False,
 ) -> DataFrame:
     """Incremental SemDeDup — ``dedup_against``'s embedding twin, the
     production-crawl shape: each new batch drops (1) every vector with
@@ -754,12 +741,9 @@ def semantic_dedup_against(
     stage 1's batch assignment (the argmax runs ONCE per side). For a
     standing pipeline persist the corpus's assigned cells once (or
     store them — the cell is partition-prunable) instead of
-    re-assigning per increment. ``persist_cells=True`` pins both
-    assigned frames for the duration of the plan; the caller releases
-    them (spark.catalog.clearCache() or a persist manager). Without it
-    the call leaves nothing pinned, unless the batch has more than
-    ``_DOOMED_LOCAL_MAX`` corpus matches: those ids stay pinned until
-    the next call or ``release_sketches()``.
+    re-assigning per increment. The call leaves nothing pinned, unless
+    the batch has more than ``_DOOMED_LOCAL_MAX`` corpus matches: those
+    ids stay pinned until the next call or ``release_sketches()``.
 
     Measured crossover (SCALE.md round 10, 10k batch / 256 cells):
     below ~a-few-hundred-k corpus vectors just re-dedup the union with
@@ -788,9 +772,6 @@ def semantic_dedup_against(
         F.col("__sd_n__").alias("__sd_cn__"),
         "__ivf_cell__",
     )
-    if persist_cells:
-        new_cells = new_cells.persist()
-        corp_cells = corp_cells.persist()
     # fixed-width probe over BOTH sides in one aggregate: a single
     # fixed dim across batch ∪ corpus is what lets both pair stages
     # run as Arrow gemm passes (ragged or mismatched widths keep the
@@ -1599,14 +1580,11 @@ class IVFPQIndex:
             if n is not None:
                 est = min(n, train_max_rows)
                 vecs = vecs.coalesce(max(1, min(int(est // 8192) + 1, 64)))
-            vecs = vecs.persist()
-            try:
+            with pin_scope() as pin:
                 coarse = coarse_train_cosine(
-                    vecs, idx.coarse, n_iter=int(coarse_iters),
+                    pin(vecs), idx.coarse, n_iter=int(coarse_iters),
                     vec_col=vec_col,
                 )
-            finally:
-                vecs.unpersist()
             idx = cls(coarse, books)
         if train_rotation:
             # OPQ rotation (opt-in — see opq_rotation_from_cov): trained
@@ -1657,14 +1635,11 @@ class IVFPQIndex:
             if n is not None:
                 est = min(n, train_max_rows)
                 resid = resid.coalesce(max(1, min(int(est // 8192) + 1, 64)))
-            resid = resid.persist()
-            try:
+            with pin_scope() as pin:
                 idx.codebooks = pq_train(
-                    resid, dim, n_sub, k, n_iter=train_iters,
+                    pin(resid), dim, n_sub, k, n_iter=train_iters,
                     vec_col="__resid__", seed=seed, init=books,
                 )
-            finally:
-                resid.unpersist()
         return idx
 
     def _cents_lit(self) -> Column:

@@ -381,8 +381,8 @@ def vocabulary(
     per distinct token shuffles), then ``TakeOrderedAndProject`` cuts to
     ``top_k`` BEFORE the ranking window — the only single-task step
     touches exactly ``top_k`` rows, never the full vocabulary. The
-    coverage denominator (total corpus tokens) reuses the counts frame
-    as a scalar aggregate, not a second corpus scan."""
+    coverage denominator (total corpus tokens) is one scalar aggregate
+    over the counts, folded into the plan as a literal."""
     from pyspark.sql import Window
 
     from lazy_frame_spark.plans.parallel import ensure_min_partitions
@@ -395,7 +395,6 @@ def vocabulary(
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .filter(F.col("n_occurrences") >= min_count)
     )
-    counts = counts.persist()
     total = counts.select(F.sum("n_occurrences")).collect()[0][0] or 0
     top = counts.orderBy(F.desc("n_occurrences"), F.asc("token")).limit(top_k)
     w = Window.orderBy(F.desc("n_occurrences"), F.asc("token"))
@@ -410,7 +409,6 @@ def vocabulary(
             F.lit(total).cast("bigint"),
         ).alias("coverage_bp"),
     )
-    counts.unpersist()
     return out
 
 

@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lazy_frame_spark.pins import release
+
 ROW_ID = "__row_id__"
 
 _NUMERIC_TYPES = (
@@ -790,12 +792,8 @@ class ColumnarPositionalIndex:
         self._handle = handle
 
     def close(self) -> None:
-        if self._handle is not None:
-            try:
-                self._handle.unpersist()
-            except Exception:
-                pass
-            self._handle = None
+        release(self._handle)
+        self._handle = None
 
     def _fetch(self, sel: DataFrame) -> DataFrame:
         lead = self._keys[0]

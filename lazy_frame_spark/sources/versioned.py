@@ -75,7 +75,6 @@ journaled sink's assumptions (sources/parquet.py).
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import json
 import math
@@ -88,6 +87,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lazy_frame_spark.pins import pin_scope
 from lazy_frame_spark.sources import filestats
 
 __all__ = [
@@ -452,25 +452,18 @@ def _local_bytes(path: str, rel_files: list[str] | set) -> int:
     return n
 
 
-def _pin(pins: contextlib.ExitStack, df: DataFrame) -> DataFrame:
-    """Persist ``df`` until ``pins`` closes — on return or on any raise,
-    so a failure surfaces its own exception and leaves nothing pinned."""
-    df = df.persist()
-    pins.callback(df.unpersist)
-    return df
-
-
 def _touched_files(spark: SparkSession, path: str, prev: dict, match,
                    files: list[str] | None = None,
-                   pins: contextlib.ExitStack | None = None):
+                   pin=None):
     """``(touched, hits)``: the distinct origin files of the VISIBLE
     rows ``match`` keeps (DV-applied: a tombstoned row can't mark its
-    file touched) and those rows — pinned in ``pins`` only for a caller
-    that re-reads them, else the cache build is pure overhead."""
+    file touched) and those rows — pinned with the caller's ``pin``
+    (a ``pin_scope``) only for a caller that re-reads them, else the
+    cache build is pure overhead."""
     hits = match(_read_snapshot(spark, path, prev, files=files,
                                 _with_position=True))
-    if pins is not None:
-        hits = _pin(pins, hits)
+    if pin is not None:
+        hits = pin(hits)
     return {r[0] for r in hits.select("__file__").distinct().collect()}, hits
 
 
@@ -2701,7 +2694,7 @@ def _dup_key(per_key: DataFrame, keys: list[str]) -> tuple:
 
 
 def _keyed_rewrite(
-    spark: SparkSession, pins: contextlib.ExitStack, path: str,
+    spark: SparkSession, pin, path: str,
     parent: int, prev: dict, keys: list[str], per_key: DataFrame,
     probe, landing: DataFrame | None, mode: str, extra: dict | None,
     matched_only: bool = False,
@@ -2713,7 +2706,8 @@ def _keyed_rewrite(
     once, not re-aggregated for ``distinct()`` — §2.4); ``probe`` is its
     ``_key_probe`` row; ``landing`` the rows written beside the
     survivors (None: survivors only), cut to matched keys when
-    ``matched_only``."""
+    ``matched_only``; ``pin`` the caller's ``pin_scope``, which also
+    holds the matched-only discovery hits."""
     n_rows = int(probe["__rows__"] or 0)
     files = list(prev["files"])
     extra = {"merge_on": keys, "merge_mode": mode, **(extra or {})}
@@ -2759,7 +2753,7 @@ def _keyed_rewrite(
             spark, path, prev,
             lambda snap: snap.select(F.col("__file__"), *keys)
             .join(src_keys, on=keys, how="leftsemi"),
-            files=scan_files, pins=pins if matched_only else None)
+            files=scan_files, pin=pin if matched_only else None)
     carried = [f for f in files if f not in touched]
 
     parts = []
@@ -2882,7 +2876,7 @@ def merge_versioned(
     for c in keys:
         if c not in names:
             raise ValueError(f"merge key {c!r} not in table schema")
-    with contextlib.ExitStack() as pins:
+    with pin_scope() as pin:
         # pin the batch for the merge's duration (Delta materializes its
         # MERGE source too): the plan upstream of `source` — often a CDC
         # diff or a filtered table read — otherwise re-evaluates for the
@@ -2891,9 +2885,9 @@ def merge_versioned(
         # it up AND the rewrite joins on its keys. O(batch keys). The
         # failure path re-probes to name an offending key — errors may
         # pay one extra job; the happy path never does.
-        source = _pin(pins, source)
-        per_key = _pin(pins, source.groupBy(*keys)
-                       .agg(F.count(F.lit(1)).alias("__n__")))
+        source = pin(source)
+        per_key = pin(source.groupBy(*keys)
+                      .agg(F.count(F.lit(1)).alias("__n__")))
         if update:
             _check_append_schema(source, prev["schema"])
         probe = _key_probe(per_key, keys)
@@ -2906,7 +2900,7 @@ def merge_versioned(
         # delete mode allows duplicate keys and lands nothing: it writes
         # the touched files' survivors only
         return _keyed_rewrite(
-            spark, pins, path, parent, prev, keys, per_key, probe,
+            spark, pin, path, parent, prev, keys, per_key, probe,
             source if update else None, when_matched, extra,
             matched_only=update and not insert_unmatched)
 
@@ -2956,11 +2950,11 @@ def apply_cdc(
         return parent, {"skipped_txn": True}
 
     op_norm = F.lower(F.col(op_col).cast("string"))
-    with contextlib.ExitStack() as pins:
+    with pin_scope() as pin:
         # the batch is re-read by the probe AND by the write (anti-join
         # + upsert projection) — pin it so the plan upstream of the tag
         # (often a relay diff or a stream source) computes ONCE. O(batch)
-        tagged = _pin(pins, batch.withColumn(
+        tagged = pin(batch.withColumn(
             "__op__",
             F.when(op_norm.isin("insert", "i", "update", "u"), "upsert")
             .when(op_norm.isin("delete", "d"), "delete"),
@@ -2971,7 +2965,7 @@ def apply_cdc(
         # delete-only-shape gate). O(batch keys). The failure paths
         # re-probe to name the offending value — errors may pay one
         # extra job; the happy path never does.
-        per_key = _pin(pins, tagged.groupBy(*keys).agg(
+        per_key = pin(tagged.groupBy(*keys).agg(
             F.count(F.lit(1)).alias("__n__"),
             F.max(F.col("__op__").isNull().cast("int")).alias("__bad__"),
             F.max((F.col("__op__") == "upsert").cast("int"))
@@ -3009,7 +3003,7 @@ def apply_cdc(
             upserts = None
         else:
             _check_append_schema(upserts, prev["schema"])
-        return _keyed_rewrite(spark, pins, path, parent, prev, keys,
+        return _keyed_rewrite(spark, pin, path, parent, prev, keys,
                               per_key, probe, upserts, "cdc", extra)
 
 
@@ -3810,30 +3804,30 @@ def relay_changes(
     # away and presents src_v's schema (old epochs NULL-fill the newer
     # columns); the feed then FOLLOWS — renames and add-column/widen
     # alike, all metadata-only alters — so its schema matches the ops
-    # it is about to ingest. The diff is PERSISTED for the append's
-    # duration: the I/U/D compaction references it from several join
-    # branches, so even the single write action would otherwise scan
-    # every changed file 4× (the delta is O(changed rows) — caching it
-    # is bounded by the change set, never the table).
-    d = diff_versions(spark, src_path, state, src_v,
-                      cluster_by=keys).persist()
-    _follow_evolution(spark, feed_path, src_fields, reserved=reserved)
-    ops = (_ops_from_diff(d, keys, preimages=include_preimages)
-           .withColumn("_src_version", F.lit(src_v))
-           .select(*[name for name, _ in src_fields], *reserved))
-    # txn identifiers make the relay append idempotent under RACES,
-    # not just replays: two relays of the same stream started together
-    # both compute the same ops, but the loser's auto-rebased append
-    # aborts when it finds the winner already carried this
-    # (stream, src_version) — the feed never holds an op twice
-    try:
+    # it is about to ingest. The diff is PINNED from the follow to the
+    # append's end (a refused follow releases it too): the I/U/D
+    # compaction references it from several join branches, so even the
+    # single write action would otherwise scan every changed file 4×
+    # (the delta is O(changed rows) — caching it is bounded by the
+    # change set, never the table).
+    with pin_scope() as pin:
+        d = pin(diff_versions(spark, src_path, state, src_v,
+                              cluster_by=keys))
+        _follow_evolution(spark, feed_path, src_fields, reserved=reserved)
+        ops = (_ops_from_diff(d, keys, preimages=include_preimages)
+               .withColumn("_src_version", F.lit(src_v))
+               .select(*[name for name, _ in src_fields], *reserved))
+        # txn identifiers make the relay append idempotent under RACES,
+        # not just replays: two relays of the same stream started
+        # together both compute the same ops, but the loser's
+        # auto-rebased append aborts when it finds the winner already
+        # carried this (stream, src_version) — the feed never holds an
+        # op twice
         v = append_versioned(
             ops, feed_path,
             extra={"relay_stream": stream_id,
                    "relay_src_version": src_v},
             txn=(f"cdf:{stream_id}", src_v))
-    finally:
-        d.unpersist()
     # op count from commit metadata (manifest rows are cumulative
     # footer totals; the append's own contribution is the difference)
     man_v = _read_manifest_meta(feed_path, v)
@@ -3893,18 +3887,15 @@ def replicate_versioned(
     # an empty ops set (logical no-op chain, e.g. a compaction) takes
     # apply_cdc's metadata-only fast path — relay state and txn ride
     # that commit exactly as they rode the old empty append.
-    d = diff_versions(spark, src_path, state, src_v,
-                      cluster_by=keys).persist()
-    _follow_evolution(spark, dst_path, src_fields)
-    ops = _ops_from_diff(d, keys)
-    try:
+    with pin_scope() as pin:
+        d = pin(diff_versions(spark, src_path, state, src_v,
+                              cluster_by=keys))
+        _follow_evolution(spark, dst_path, src_fields)
         v, st = apply_cdc(
-            spark, dst_path, ops, keys,
+            spark, dst_path, _ops_from_diff(d, keys), keys,
             extra={"relay_stream": stream_id,
                    "relay_src_version": src_v},
             txn=(f"cdf:{stream_id}", src_v))
-    finally:
-        d.unpersist()
     st.update({"bootstrap": False, "src_version": src_v,
                "ops": st.get("rows_applied", 0)})
     return v, st

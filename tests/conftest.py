@@ -9,6 +9,36 @@ def spark():
     yield s
 
 
+#: versioned and pipeline modules: each of their tests must leave the
+#: cache manager as it found it
+_LEAK_CHECKED = {"test_sources_sinks", "test_skipping", "test_evolution_cdf",
+                 "test_pipeline_ops", "test_streaming", "test_stateful"}
+
+
+@pytest.fixture(autouse=True)
+def _no_pin_residue(request):
+    """Scoped leak check: once the keyed pin registries (dedup sketches,
+    mixing rate tables) are released, the test must have left no cached
+    plan behind. Counts cache-manager entries, not persistent RDDs: a
+    pin that was never materialized has no RDD, and localCheckpoint
+    RDDs are freed by GC, not by the code under test."""
+    if request.module.__name__.rpartition(".")[2] not in _LEAK_CHECKED:
+        yield
+        return
+    from lazy_frame_spark.operators import (release_rate_tables,
+                                            release_sketches)
+
+    cache = (request.getfixturevalue("spark")._jsparkSession
+             .sharedState().cacheManager())
+    release_sketches()
+    release_rate_tables()
+    before = cache.numCachedEntries()
+    yield
+    release_sketches()
+    release_rate_tables()
+    assert cache.numCachedEntries() == before, "test left a pinned frame"
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

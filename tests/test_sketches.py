@@ -771,3 +771,30 @@ def test_join_view_refuses_ambiguous_and_unbuilt(spark, sf_dir, tmp_path):
     V.delete_versioned(spark, ap, "o_orderkey < 10")
     with _pytest.raises(ValueError, match="additive"):
         I.join_view_update(spark, vp, ap, bp)
+
+
+def test_join_view_update_releases_deltas_on_raise(spark, sf_dir, tmp_path,
+                                                   monkeypatch):
+    """Both delta pins are call-scoped: a raise after they are taken
+    (here in the probe) surfaces its own exception and leaves the cache
+    manager as it was."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from lazy_frame_spark.operators import incremental as I
+    from lazy_frame_spark.sources import versioned as V
+
+    o, c, ap, bp = _jv_tables(spark, sf_dir, tmp_path)
+    vp = str(tmp_path / "v")
+    I.join_view_init(spark, vp, ap, bp, "o_custkey")
+    V.append_versioned(o.filter(F.col("o_orderkey") % 3 == 1), ap)
+
+    def probe_fails(df, keys):
+        raise ZeroDivisionError("probe")
+
+    monkeypatch.setattr(I, "_jv_probe_delta", probe_fails)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with _pytest.raises(ZeroDivisionError, match="probe"):
+        I.join_view_update(spark, vp, ap, bp)
+    assert cache.numCachedEntries() == before

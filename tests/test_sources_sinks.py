@@ -108,6 +108,7 @@ def test_large_point_set_uses_join_path(spark, sf_dir):
         F.min("__row_id__"), F.max("__row_id__")
     ).collect()[0]
     assert (ids[0], ids[1]) == (2, 6000)
+    lf.close()
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
@@ -1402,6 +1403,8 @@ def test_lazyframe_open_versioned_time_travel(spark, tmp_path):
                           version="1").nrow() == 10
     with pytest.raises(ValueError, match="do not apply"):
         LazyFrame.open(spark, t, format="versioned", mergeSchema=True)
+    lf1.close()
+    lf2.close()
 
 
 def test_versioned_randomized_ops_vs_model(spark, tmp_path):
