@@ -403,9 +403,10 @@ class LazyFrame:
         return df.drop(CORRUPT_COL), handle
 
     def close(self) -> None:
-        """Release any persisted state (M7 finalizer parity,
-        R/lazy.frame.R:12-15)."""
-        release(self._cache_handle or self._df)
+        """Release the state this frame persisted (M7 finalizer parity,
+        R/lazy.frame.R:12-15) — never a pin the caller took on the
+        DataFrame it handed to ``from_df``."""
+        release(self._cache_handle)
         self._cache_handle = None
 
     # ------------------------------------------------------------------ #

@@ -79,22 +79,14 @@ def _lf(spark: SparkSession, sf_dir: str, name: str) -> LazyFrame:
     frames bound to a dead session. LRU-bounded at ``_LF_CACHE_MAX``;
     ``release_frames()`` drops everything explicitly."""
     for k in [k for k in _LF_CACHE if k[0] != id(spark)]:
-        lf = _LF_CACHE.pop(k)
-        try:
-            lf.close()
-        except Exception:
-            pass
+        _LF_CACHE.pop(k).close()
     key = (id(spark), sf_dir, name)
     if key in _LF_CACHE:
         lf = _LF_CACHE.pop(key)  # re-insert: move to MRU position
         _LF_CACHE[key] = lf
         return lf
     while len(_LF_CACHE) >= _LF_CACHE_MAX:
-        oldest = _LF_CACHE.pop(next(iter(_LF_CACHE)))
-        try:
-            oldest.close()
-        except Exception:
-            pass
+        _LF_CACHE.pop(next(iter(_LF_CACHE))).close()
     _LF_CACHE[key] = LazyFrame.from_df(
         _table(spark, sf_dir, name), order_by=TABLE_KEYS[name]
     )
@@ -106,10 +98,7 @@ def release_frames() -> None:
     of ``operators.dedup.release_sketches``) — the explicit lifecycle
     hook for long sessions that are done with positional queries."""
     for key in list(_LF_CACHE):
-        try:
-            _LF_CACHE.pop(key).close()
-        except Exception:
-            pass
+        _LF_CACHE.pop(key).close()
 
 
 LINEITEM_RID = (

@@ -164,23 +164,25 @@ def _offset_lookup(offsets: dict[int, int], idx):
     return F.element_at(arr, idx.cast("int") + F.lit(1))
 
 
-def _bisect_gt_expr(name: str, cuts: list[float]):
-    """``Σ (v > b_i)`` over SORTED distinct cuts as a nested-IF binary
-    search — identical bucket ids to the flat compare-sum for EVERY
-    input (strict-``>`` searchsorted by monotonicity; a NULL value's
-    NULL comparisons take every else-branch down to leaf 0, matching
-    the old per-term ``otherwise(0)``; Spark compares NaN above
-    everything, so NaN descends right to leaf ``len(cuts)``, exactly
-    the all-true sum) — but O(log n) comparisons per row instead of n,
-    and O(log n) plan text per evaluation path. Same rationale as
-    ``versioned._bisect_bucket_expr`` (its ``>=`` twin): the flat sum
-    grows linearly in bucket count, and bucket counts scale with the
-    cluster, not the laptop."""
+def _bisect_bucket_expr(name: str, cuts: list[float]):
+    """``Σ (v >= b_i)`` over SORTED cuts as a nested-IF binary search —
+    the same bucket id for EVERY input as the flat compare-sum (it is
+    searchsorted-right; a NULL value's NULL comparisons take every
+    else-branch down to leaf 0, matching the sum's NULL→coalesce→0;
+    Spark orders NaN above everything, so NaN descends right to leaf
+    ``len(cuts)``, exactly the all-true sum) — but evaluated in
+    O(log n) comparisons per row, and O(log n) plan text per
+    evaluation path, instead of n. The flat n-term sum was measured
+    30× slower than the scan it rode on: its generated method exceeds
+    HotSpot's JIT size threshold, so every row paid n
+    bytecode-interpreted compare+cast+adds. One parsed expression,
+    double literals via the exact ``D`` spelling. Shared by the
+    ordered-id buckets here and ``versioned``'s cluster quantiles."""
     def node(lo: int, hi: int) -> str:
         if lo == hi:
             return str(lo)
         mid = (lo + hi) // 2
-        return (f"IF(`{name}` > {cuts[mid]!r}D, "
+        return (f"IF(`{name}` >= {cuts[mid]!r}D, "
                 f"{node(mid + 1, hi)}, {node(lo, mid)})")
 
     return F.expr(node(0, len(cuts)))
@@ -199,7 +201,7 @@ def _bucketed(df: DataFrame, lead_expr, bounds: list[float]) -> DataFrame:
     # as a named attribute so the bisection tree references an
     # attribute, not n-1 inlined copies of the surrogate expression
     return (df.withColumn("__lfb_lead__", lead_expr)
-            .withColumn("__bkt__", _bisect_gt_expr("__lfb_lead__", cuts))
+            .withColumn("__bkt__", _bisect_bucket_expr("__lfb_lead__", cuts))
             .drop("__lfb_lead__"))
 
 
@@ -340,6 +342,47 @@ def _surrogate_value(v, dtype) -> float | None:
     return None
 
 
+def _footer_row_groups(df: DataFrame, col: str,
+                       max_files: int | None = None):
+    """``(files, [(rows, stats), ...])`` — ``col``'s row-group
+    statistics in every parquet footer of ``df``'s scan, read
+    driver-side with pyarrow: no data scan, no job. ``files`` are the
+    plan's data files (writer debris such as ``_SUCCESS`` dropped); with
+    ``max_files`` only an evenly spaced sample of that many footers is
+    read. None when the frame is not a clean parquet file scan, a
+    footer cannot be read or lacks ``col``, or a row group has no
+    min/max."""
+    try:
+        import pyarrow.parquet as pq
+
+        files = df.inputFiles()
+    except Exception:
+        return None
+    files = [f for f in files if not f.rsplit("/", 1)[-1].startswith("_")]
+    if not files or not all(f.endswith((".parquet", ".parq")) for f in files):
+        return None
+    if max_files is not None and len(files) > max_files:
+        step = len(files) / max_files
+        files = [files[int(i * step)] for i in range(max_files)]
+    groups = []
+    for uri in files:
+        try:
+            md = pq.ParquetFile(
+                uri[7:] if uri.startswith("file://") else uri).metadata
+        except Exception:
+            return None
+        names = {md.schema.column(i).path: i for i in range(md.num_columns)}
+        if col not in names:
+            return None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(names[col]).statistics
+            if st is None or not st.has_min_max:
+                return None
+            groups.append((rg.num_rows, st))
+    return files, groups
+
+
 def parquet_footer_bounds(
     df: DataFrame, lead: str, num_buckets: int, max_files: int = 256
 ) -> list[float] | None:
@@ -357,44 +400,18 @@ def parquet_footer_bounds(
     files only an evenly-spaced sample of ``max_files`` footers is read
     (at 100 TB ≈ 100k files, reading every footer on the driver would
     itself be a bottleneck; a sample estimates balance just as well)."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return None
     dtype = df.schema[lead].dataType
-    try:
-        files = df.inputFiles()
-    except Exception:
+    footer = _footer_row_groups(df, lead, max_files)
+    if footer is None:
         return None
-    files = [f for f in files if not f.rsplit("/", 1)[-1].startswith("_")]
-    if not files or not all(f.endswith((".parquet", ".parq")) for f in files):
-        return None
-    if len(files) > max_files:
-        step = len(files) / max_files
-        files = [files[int(i * step)] for i in range(max_files)]
-
     intervals: list[tuple[float, float, int]] = []
-    for uri in files:
-        path = uri[7:] if uri.startswith("file://") else uri
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
+    for rows, st in footer[1]:
+        lo, hi = _surrogate_value(st.min, dtype), _surrogate_value(st.max, dtype)
+        if lo is None or hi is None or not (lo <= hi):
             return None
-        names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-        if lead not in names:
-            return None
-        ci = names[lead]
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            st = rg.column(ci).statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo, hi = _surrogate_value(st.min, dtype), _surrogate_value(st.max, dtype)
-            if lo is None or hi is None or not (lo <= hi):
-                return None
-            n = rg.num_rows - (st.null_count if st.has_null_count else 0)
-            if n > 0:
-                intervals.append((lo, hi, n))
+        n = rows - (st.null_count if st.has_null_count else 0)
+        if n > 0:
+            intervals.append((lo, hi, n))
     if not intervals:
         return None
 
@@ -458,36 +475,14 @@ def parquet_footer_stats(df: DataFrame, col: str):
     group lacks statistics (caller falls back to a data scan). Raw
     min/max values are returned as stored (int/float/date/bytes), NOT
     the bucketing surrogate."""
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        return None
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    files = [f for f in files if not f.rsplit("/", 1)[-1].startswith("_")]
-    if not files or not all(f.endswith((".parquet", ".parq")) for f in files):
+    footer = _footer_row_groups(df, col)
+    if footer is None:
         return None
     n_rows, lo, hi = 0, None, None
-    for uri in files:
-        path = uri[7:] if uri.startswith("file://") else uri
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
-            return None
-        names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-        if col not in names:
-            return None
-        ci = names[col]
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            n_rows += rg.num_rows
-            st = rg.column(ci).statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo = st.min if lo is None or st.min < lo else lo
-            hi = st.max if hi is None or st.max > hi else hi
+    for rows, st in footer[1]:
+        n_rows += rows
+        lo = st.min if lo is None or st.min < lo else lo
+        hi = st.max if hi is None or st.max > hi else hi
     return n_rows, lo, hi
 
 
@@ -712,38 +707,17 @@ def footer_sorted_candidate(df: DataFrame, keys) -> bool:
     return False (no cheap evidence). ``keys``: the composite sort key
     (a single column name is accepted for the lead-only check)."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    lead = keys[0]
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
+    dtype = df.schema[keys[0]].dataType
+    footer = _footer_row_groups(df, keys[0])
+    if footer is None:
         return False
-    dtype = df.schema[lead].dataType
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
-    files = [f for f in files if not f.rsplit("/", 1)[-1].startswith("_")]
-    if not files or not all(f.endswith((".parquet", ".parq")) for f in files):
-        return False
+    files, groups = footer
     spans: list[tuple[float, float]] = []
-    for uri in files:
-        path = uri[7:] if uri.startswith("file://") else uri
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
+    for _rows, st in groups:
+        lo, hi = _surrogate_value(st.min, dtype), _surrogate_value(st.max, dtype)
+        if lo is None or hi is None:
             return False
-        names = {md.schema.column(i).path: i for i in range(md.num_columns)}
-        if lead not in names:
-            return False
-        ci = names[lead]
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            if st is None or not st.has_min_max:
-                return False
-            lo, hi = _surrogate_value(st.min, dtype), _surrogate_value(st.max, dtype)
-            if lo is None or hi is None:
-                return False
-            spans.append((lo, hi))
+        spans.append((lo, hi))
     if len(spans) > 1:
         spans.sort()
         if not all(a[1] < b[0] for a, b in zip(spans, spans[1:])):

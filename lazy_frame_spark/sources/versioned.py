@@ -88,6 +88,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lazy_frame_spark.pins import pin_scope
+from lazy_frame_spark.rowid import _bisect_bucket_expr
 from lazy_frame_spark.sources import filestats
 
 __all__ = [
@@ -270,6 +271,65 @@ def _publish(path: str, version: int, doc: dict) -> None:
 _MAX_COMMIT_RETRIES = 5
 
 
+def _txn_applied(path: str, as_of: int | None, extra: dict | None,
+                 txn: tuple | None = None) -> tuple[dict | None, bool]:
+    """``(extra, applied)``: ``txn=(app_id, txn_version)`` folded into
+    ``extra`` (Delta's transaction identifiers — the commit records the
+    pair), and whether the pair ``extra`` carries is at or below the
+    app's mark as of version ``as_of`` — an already-applied replay, or
+    a racing twin whose commit won. Anchored on the exact parent the
+    commit would extend, the check has no window: a same-app commit
+    either sits in that chain already or lands at parent+1, which loses
+    this attempt its race, and ``_commit_with_rebase`` re-checks on the
+    winner's chain. The txn pair is the ONE exactly-once mark — stream
+    sinks ride it as ``("stream:<id>", batch_id)``."""
+    if txn is not None:
+        extra = {**(extra or {}), "txn_app": txn[0],
+                 "txn_version": int(txn[1])}
+    if (as_of is None or not extra or extra.get("txn_app") is None
+            or extra.get("txn_version") is None):
+        return extra, False
+    last = last_txn_version(path, extra["txn_app"], version=as_of)
+    return extra, last is not None and last >= int(extra["txn_version"])
+
+
+def _commit_with_rebase(path: str, parent: int | None, prev: dict | None,
+                        attempt: tuple, rebase) -> int:
+    """The ONE optimistic commit loop behind every versioned writer: a
+    commit either lands, rebases, or raises ``VersionConflict``, and is
+    never lost or applied twice. ``attempt`` is ``_commit``'s
+    ``(action, files, schema_json, extra, dvs)`` built on ``parent``
+    (manifest ``prev``; None for a table-creating attempt). On a lost
+    race the loop re-reads the latest version: when the winner's chain
+    already carries this commit's txn (a racing twin, a replayed job)
+    it returns the winner's version — committing again would
+    double-apply. Otherwise the verb's rule ``rebase(parent, prev,
+    winner_version, winner)`` returns the next attempt on the winner,
+    None when the winner already holds this commit's effect (its
+    version is returned), or raises ``VersionConflict`` when the two do
+    not commute. A lost attempt's data directory is referenced by no
+    manifest and is reclaimed by ``vacuum_versioned``."""
+    for _ in range(_MAX_COMMIT_RETRIES):
+        action, files, schema_json, extra, dvs = attempt
+        try:
+            return _commit(path, action, files, schema_json, parent, extra,
+                           dvs=dvs)
+        except VersionConflict:
+            pass  # outside the handler: a rule's error chains to nothing
+        new_parent = latest_version(path)
+        if _txn_applied(path, new_parent, extra)[1]:
+            return new_parent
+        winner = _read_manifest(path, new_parent)
+        attempt = rebase(parent, prev, new_parent, winner)
+        if attempt is None:
+            return new_parent
+        parent, prev = new_parent, winner
+    raise VersionConflict(
+        f"{attempt[0]} of {path}: exceeded {_MAX_COMMIT_RETRIES} rebase "
+        "attempts under sustained concurrent writes"
+    )
+
+
 def _chain_is_additive(path: str, since: int, until: int) -> bool:
     """True when every commit in (since, until] only ADDED files or
     metadata (``append`` / ``alter``) — the winner set a rebasing
@@ -296,31 +356,23 @@ def _commit_rewrite_with_rebase(
     winner's list minus ``replaced`` plus ``new_files`` — the winner's
     appended files ride along untouched. A non-additive winner
     (delete/merge/...) invalidated the rewrite's read-set: the loser
-    raises ``VersionConflict`` and the caller re-runs on fresh state
-    (its attempt directory is unreferenced and vacuumable)."""
+    raises ``VersionConflict`` and the caller re-runs on fresh state."""
     replaced_set = set(replaced)
-    files = [f for f in prev["files"] if f not in replaced_set]
-    files += new_files
-    for _ in range(_MAX_COMMIT_RETRIES):
-        try:
-            return _commit(path, action, files, prev["schema"], parent,
-                           extra, dvs=dvs)
-        except VersionConflict:
-            new_parent = latest_version(path)
-            if not _chain_is_additive(path, parent, new_parent):
-                raise VersionConflict(
-                    f"{action} of {path} lost to a concurrent commit "
-                    "that rewrote or removed data — re-run on the new "
-                    "table state"
-                ) from None
-            winner = _read_manifest(path, new_parent)
-            files = [f for f in winner["files"]
-                     if f not in replaced_set] + new_files
-            parent, prev = new_parent, winner
-    raise VersionConflict(
-        f"{action} of {path}: exceeded {_MAX_COMMIT_RETRIES} rebase "
-        "attempts under sustained concurrent writes"
-    )
+
+    def attempt_on(man: dict) -> tuple:
+        return (action, [f for f in man["files"] if f not in replaced_set]
+                + new_files, man["schema"], extra, dvs)
+
+    def rebase(since, _before, v, winner):
+        if not _chain_is_additive(path, since, v):
+            raise VersionConflict(
+                f"{action} of {path} lost to a concurrent commit "
+                "that rewrote or removed data — re-run on the new "
+                "table state"
+            )
+        return attempt_on(winner)
+
+    return _commit_with_rebase(path, parent, prev, attempt_on(prev), rebase)
 
 
 def _commit_keyed_with_rebase(
@@ -348,75 +400,61 @@ def _commit_keyed_with_rebase(
     callers for that read; without it a constraint change surfaces as
     ``VersionConflict`` instead). Anything unprovable surfaces as
     ``VersionConflict`` for a clean re-run."""
-    for _ in range(_MAX_COMMIT_RETRIES):
-        try:
-            return _commit(path, action, files, prev["schema"], parent,
-                           extra)
-        except VersionConflict:
-            new_parent = latest_version(path)
-            if extra and "txn_app" in extra:
-                # the winner may BE this transaction (racing twin /
-                # replayed job): committing again would double-apply
-                last = last_txn_version(path, extra["txn_app"],
-                                        version=new_parent)
-                if last is not None and last >= extra["txn_version"]:
-                    return new_parent
-            if (src_where is None
-                    or not _chain_is_additive(path, parent, new_parent)):
+    def rebase(since, before, v, winner):
+        nonlocal files
+        if src_where is None or not _chain_is_additive(path, since, v):
+            raise VersionConflict(
+                f"{action} of {path} lost to a concurrent commit "
+                "it cannot commute with — re-run on the new table "
+                "state"
+            )
+        before_cons = before.get("constraints") or {}
+        added_cons = {k: c for k, c in
+                      (winner.get("constraints") or {}).items()
+                      if before_cons.get(k) != c}
+        if added_cons:
+            if spark is None:
                 raise VersionConflict(
-                    f"{action} of {path} lost to a concurrent commit "
-                    "it cannot commute with — re-run on the new table "
+                    f"{action} of {path}: a concurrent commit "
+                    f"added CHECK constraint(s) "
+                    f"{sorted(added_cons)} this commit was not "
+                    "validated against — re-run on the new table "
                     "state"
-                ) from None
-            winner = _read_manifest(path, new_parent)
-            prev_cons = prev.get("constraints") or {}
-            winner_cons = winner.get("constraints") or {}
-            added_cons = {k: v for k, v in winner_cons.items()
-                          if prev_cons.get(k) != v}
-            if added_cons:
-                if spark is None:
-                    raise VersionConflict(
-                        f"{action} of {path}: a concurrent commit "
-                        f"added CHECK constraint(s) "
-                        f"{sorted(added_cons)} this commit was not "
-                        "validated against — re-run on the new table "
-                        "state"
-                    ) from None
-                if new_files:
-                    # winner's committed schema: pads columns the
-                    # rebased files lack as NULL (NULL passes CHECK)
-                    # and up-casts narrow pre-widening files
-                    batch = spark.read.schema(
-                        _committed_schema(winner)).parquet(
-                        *[os.path.join(path, rel) for rel in new_files])
-                    _validate_constraints(
-                        batch, added_cons,
-                        f"{action} (rebased over concurrent "
-                        f"add_constraint)")
-            prev_set = set(prev["files"])
-            winner_new = [f for f in winner["files"]
-                          if f not in prev_set]
-            # src_where == [] is the EMPTY footprint (a zero-row batch):
-            # it provably matches no row anywhere, so every additive
-            # winner is disjoint by definition — distinct from None,
-            # which means "footprint unknown" and already raised above
-            not_disjoint = (
-                [] if not src_where
-                else filestats.prune_files(path, winner_new, src_where))
-            if not_disjoint:
-                raise VersionConflict(
-                    f"{action} of {path}: a concurrent append may "
-                    f"contain rows matching the source keys "
-                    f"({len(not_disjoint)} file(s) not provably "
-                    "disjoint by commit-time bounds) — re-run on the "
-                    "new table state"
-                ) from None
-            files = files + winner_new
-            parent, prev = new_parent, winner
-    raise VersionConflict(
-        f"{action} of {path}: exceeded {_MAX_COMMIT_RETRIES} rebase "
-        "attempts under sustained concurrent writes"
-    )
+                )
+            if new_files:
+                # winner's committed schema: pads columns the
+                # rebased files lack as NULL (NULL passes CHECK)
+                # and up-casts narrow pre-widening files
+                batch = spark.read.schema(
+                    _committed_schema(winner)).parquet(
+                    *[os.path.join(path, rel) for rel in new_files])
+                _validate_constraints(
+                    batch, added_cons,
+                    f"{action} (rebased over concurrent "
+                    f"add_constraint)")
+        before_set = set(before["files"])
+        winner_new = [f for f in winner["files"] if f not in before_set]
+        # src_where == [] is the EMPTY footprint (a zero-row batch):
+        # it provably matches no row anywhere, so every additive
+        # winner is disjoint by definition — distinct from None,
+        # which means "footprint unknown" and already raised above
+        not_disjoint = (
+            [] if not src_where
+            else filestats.prune_files(path, winner_new, src_where))
+        if not_disjoint:
+            raise VersionConflict(
+                f"{action} of {path}: a concurrent append may "
+                f"contain rows matching the source keys "
+                f"({len(not_disjoint)} file(s) not provably "
+                "disjoint by commit-time bounds) — re-run on the "
+                "new table state"
+            )
+        files = files + winner_new
+        return action, files, winner["schema"], extra, None
+
+    return _commit_with_rebase(path, parent, prev,
+                               (action, files, prev["schema"], extra, None),
+                               rebase)
 
 
 #: maintenance rewrites at or under this estimated size get an AQE
@@ -587,12 +625,13 @@ def _commit(
             and extra.get("txn_version") is not None:
         # Delta-parity monotonicity contract, enforced at the choke
         # point: per app, txn_version must strictly increase along the
-        # commit chain. Every shipped caller checks _applied first and
-        # never trips this; the guard is what makes "walk newest-first,
-        # stop at the app's first manifest" in last_txn_version an
-        # INVARIANT rather than a convention — a bypassing caller that
-        # commits an out-of-order txn would otherwise silently regress
-        # the idempotence mark and let a very late replay double-apply.
+        # commit chain. Every shipped caller checks _txn_applied first
+        # and never trips this; the guard is what makes "walk
+        # newest-first, stop at the app's first manifest" in
+        # last_txn_version an INVARIANT rather than a convention — a
+        # bypassing caller that commits an out-of-order txn would
+        # otherwise silently regress the idempotence mark and let a
+        # very late replay double-apply.
         last = last_txn_version(path, extra["txn_app"], version=parent)
         if last is not None and int(extra["txn_version"]) <= last:
             raise ValueError(
@@ -764,40 +803,30 @@ def write_versioned(df: DataFrame, path: str,
     ``append_versioned``: an already-applied replay — or a racing twin
     that lost the table-creation or overwrite race — returns the
     current version WITHOUT committing."""
-    def _applied(as_of: int | None) -> bool:
-        if txn is None or as_of is None:
-            return False
-        last = last_txn_version(path, txn[0], version=as_of)
-        return last is not None and last >= int(txn[1])
-
-    if txn is not None:
-        extra = {**(extra or {}), "txn_app": txn[0],
-                 "txn_version": int(txn[1])}
     os.makedirs(path, exist_ok=True)
     parent = latest_version(path)
-    if _applied(parent):
+    extra, applied = _txn_applied(path, parent, extra, txn)
+    if applied:
         return parent
     if parent is not None:
         cons = _read_manifest(path, parent).get("constraints") or {}
         _check_constraints_resolve(
             df.sparkSession, cons, df.schema, "write_versioned")
         _validate_constraints(df, cons, "write_versioned")
-    version = (parent or 0) + 1
-    files = _write_data_dir(df, path, version)
-    try:
-        # a fresh snapshot references only its own files — no DVs apply
-        return _commit(path, "overwrite", files, df.schema.json(), parent,
-                       extra, dvs=[])
-    except VersionConflict:
-        new_parent = latest_version(path)
-        if _applied(new_parent):
-            # the winner WAS this transaction (a racing twin / replayed
-            # job): committing again would double-apply — the orphan
-            # data dir is unreferenced and vacuumable
-            return new_parent
+    files = _write_data_dir(df, path, (parent or 0) + 1)
+
+    def never_commutes(*_):
         # a snapshot REPLACES table state, so unlike a blind append it
         # does not commute with an unknown winner — surface the race
-        raise
+        raise VersionConflict(
+            f"overwrite of {path} lost to a concurrent commit — re-run "
+            "on the new table state"
+        )
+
+    # a fresh snapshot references only its own files — no DVs apply
+    return _commit_with_rebase(
+        path, parent, None,
+        ("overwrite", files, df.schema.json(), extra, []), never_commutes)
 
 
 def _committed_schema(man_or_json) -> T.StructType:
@@ -1228,10 +1257,11 @@ def _occupied_slots(prev: dict) -> set[str]:
 
 def _check_rebase_mapping(path: str, prev: dict, schema_json: str,
                           assigned: dict, written_map: dict) -> None:
-    """Slot-integrity gate for a merge_schema append REBASING onto a
-    concurrent winner (ADVICE r14): the batch's data dir is already on
-    disk under the physical slots of the ORIGINAL parent, and the
-    winner may have moved the ground — a rename/drop winner makes a
+    """Slot-integrity gate for an append REBASING onto a concurrent
+    winner (ADVICE r14): the batch's data dir is already on disk under
+    the physical slots of the ORIGINAL parent (its own column names
+    when it lost the table-creation race), and the winner may have
+    moved the ground — a rename/drop winner makes a
     batch column (now "new" to ``_merge_schemas``) default to a slot
     that is the winner's live storage (two logical columns reading one
     physical slot) or a retired slot (resurrecting dropped data); a
@@ -1347,124 +1377,75 @@ def append_versioned(df: DataFrame, path: str,
     mark no-ops here, and ``_commit`` itself refuses an out-of-order
     txn so the mark can never regress (which is what keeps the
     newest-first O(1) walk in ``last_txn_version`` exact)."""
-    def _applied(as_of: int | None) -> bool:
-        if txn is None or as_of is None:
-            return False
-        last = last_txn_version(path, txn[0], version=as_of)
-        return last is not None and last >= int(txn[1])
-
-    if txn is not None:
-        extra = {**(extra or {}), "txn_app": txn[0],
-                 "txn_version": int(txn[1])}
     parent = latest_version(path)
-    if _applied(parent):
+    extra, applied = _txn_applied(path, parent, extra, txn)
+    if applied:
         # checked against the exact chain the commit would extend:
         # already-applied replays and racing twins return without
         # writing anything
         return parent
-    new_files: list[str] | None = None
+
+    def schema_on(man: dict) -> str:
+        if merge_schema:
+            return _merge_schemas(man["schema"], df.schema.json())
+        _check_append_schema(df, man["schema"])
+        return man["schema"]
+
+    def extra_with(mapping: dict) -> dict | None:
+        return ({**(extra or {}), "column_mapping": mapping}
+                if assigned else extra)
+
+    assigned: dict = {}
     if parent is None:
+        # table creation: the batch writes under its own names, and a
+        # lost creation race is an ordinary lost race — the rule below
+        # lands these rows ON TOP of the winner's, reusing the data dir
         os.makedirs(path, exist_ok=True)
         new_files = _write_data_dir(df, path, 1)
-        try:
-            return _commit(path, "overwrite", new_files,
-                           df.schema.json(), None, extra)
-        except VersionConflict:
-            # the TABLE-CREATION race: another writer committed v1
-            # first. The idempotence contract holds here too — if the
-            # winner WAS this transaction (a duplicated stream's first
-            # micro-batch, a racing twin), return its version without
-            # committing; otherwise fall through to the ordinary
-            # append path and land these rows ON TOP of the winner's
-            # (a blind append commutes with any winner), reusing the
-            # already-written data dir.
-            parent = latest_version(path)
-            if _applied(parent):
-                return parent
-    prev = _read_manifest(path, parent)
-    if new_files is not None and (
-            _col_mapping(prev)
-            or set(df.columns) & set(prev.get("retired_columns") or [])):
-        # creation-race fallback: the batch's data dir was written
-        # under its own (logical) names before we knew the winner's
-        # state — a mapped winner table would misread those files, and
-        # a winner carrying retired slots (a clone bootstrap) would
-        # resurrect dropped-column storage under a recycled name
-        raise VersionConflict(
-            f"append to {path}: lost the table-creation race to a "
-            "winner with a column mapping or retired slots — re-run "
-            "on the new state"
-        )
-    assigned: dict = {}
-    if merge_schema:
-        schema_json = _merge_schemas(prev["schema"], df.schema.json())
-        # new columns get physical slots (fresh ones when the name is
-        # occupied by a renamed/dropped column's storage) — fixed HERE,
-        # before the write, and carried unchanged through any rebase
-        assigned = _assign_physical_slots(prev, schema_json)
+        written_map = {c: c for c in df.columns}
+        prev, first = None, ("overwrite", new_files, df.schema.json(),
+                             extra, None)
     else:
-        _check_append_schema(df, prev["schema"])
-        schema_json = prev["schema"]
-    mapping_now = {**_col_mapping(prev), **assigned}
-    # validate against the batch AS IT WILL BE READ: a merge_schema
-    # batch may legitimately omit a committed column (it reads as NULL,
-    # which passes SQL CHECK) — pad it with typed NULLs so F.expr
-    # resolves instead of dying on an unresolved column
-    _validate_constraints(_pad_to_schema(df, schema_json),
-                          prev.get("constraints") or {},
-                          "append_versioned")
-    version = parent + 1
-    if new_files is None:
-        new_files = _write_data_dir(df, path, version,
-                                    mapping=mapping_now)
-    # the exact physical slot each batch column's files were written
-    # under — the ground truth every rebase must re-prove still holds
-    written_map = {c: mapping_now.get(c, c) for c in df.columns}
-    commit_extra = ({**(extra or {}), "column_mapping": mapping_now}
-                    if assigned else extra)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        try:
-            return _commit(
-                path, "append", list(prev["files"]) + new_files,
-                schema_json, parent, commit_extra,
-            )
-        except VersionConflict:
-            # optimistic rebase: a blind append commutes with ANY
-            # winner — its rows don't depend on what it read — so the
-            # loser re-validates against the winner's committed state
-            # (schema may have evolved, constraints may have been
-            # added, the winner's DV list rides in via _commit's
-            # inheritance) and re-attempts parent+1. Concurrent
-            # ingest never has to coordinate.
-            parent = latest_version(path)
-            if _applied(parent):
-                # the winner WAS this transaction (a racing twin or a
-                # replayed job): committing again would double-apply —
-                # the orphan data dir is unreferenced and vacuumable
-                return parent
-            prev = _read_manifest(path, parent)
-            if merge_schema:
-                schema_json = _merge_schemas(prev["schema"],
-                                             df.schema.json())
-                # a rename/drop/merge_schema winner may have moved the
-                # slot ground under the already-written data dir —
-                # re-prove the whole mapping before the rebased commit
-                _check_rebase_mapping(path, prev, schema_json,
-                                      assigned, written_map)
-            else:
-                _check_append_schema(df, prev["schema"])
-                schema_json = prev["schema"]
-            mapping_now = {**_col_mapping(prev), **assigned}
-            commit_extra = (
-                {**(extra or {}), "column_mapping": mapping_now}
-                if assigned else extra)
-            _validate_constraints(_pad_to_schema(df, schema_json),
-                                  prev.get("constraints") or {},
-                                  "append_versioned(rebase)")
-    raise VersionConflict(
-        f"append to {path}: exceeded {_MAX_COMMIT_RETRIES} rebase "
-        "attempts under sustained concurrent writes"
-    )
+        prev = _read_manifest(path, parent)
+        schema_json = schema_on(prev)
+        if merge_schema:
+            # new columns get physical slots (fresh ones when the name
+            # is occupied by a renamed/dropped column's storage) — fixed
+            # HERE, before the write, and carried through any rebase
+            assigned = _assign_physical_slots(prev, schema_json)
+        mapping = {**_col_mapping(prev), **assigned}
+        # validate against the batch AS IT WILL BE READ: a merge_schema
+        # batch may legitimately omit a committed column (it reads as
+        # NULL, which passes SQL CHECK) — pad it with typed NULLs so
+        # F.expr resolves instead of dying on an unresolved column
+        _validate_constraints(_pad_to_schema(df, schema_json),
+                              prev.get("constraints") or {},
+                              "append_versioned")
+        new_files = _write_data_dir(df, path, parent + 1, mapping=mapping)
+        # the exact physical slot each batch column's files were written
+        # under — the ground truth every rebase must re-prove still holds
+        written_map = {c: mapping.get(c, c) for c in df.columns}
+        first = ("append", list(prev["files"]) + new_files, schema_json,
+                 extra_with(mapping), None)
+
+    def rebase(_since, _before, _v, winner):
+        # a blind append commutes with ANY winner — its rows don't
+        # depend on what it read — so the loser re-validates against
+        # the winner's committed state (schema may have evolved,
+        # constraints may have been added, the winner's DV list rides
+        # in via _commit's inheritance). A rename/drop/merge_schema
+        # winner may have moved the slot ground under the
+        # already-written data dir: the whole mapping is re-proved.
+        schema_json = schema_on(winner)
+        _check_rebase_mapping(path, winner, schema_json, assigned,
+                              written_map)
+        _validate_constraints(_pad_to_schema(df, schema_json),
+                              winner.get("constraints") or {},
+                              "append_versioned(rebase)")
+        return ("append", list(winner["files"]) + new_files, schema_json,
+                extra_with({**_col_mapping(winner), **assigned}), None)
+
+    return _commit_with_rebase(path, parent, prev, first, rebase)
 
 
 _TXN_HW_FILE = "_txn_hw.json"
@@ -1478,8 +1459,8 @@ def last_txn_version(path: str, app: str,
     through commit parents — O(1) in the steady state where the latest
     commit is the app's own. None when the app never committed.
 
-    The ``version`` anchor is what makes the idempotence check in
-    ``append_versioned`` race-free: checked against the exact parent
+    The ``version`` anchor is what makes the idempotence check
+    (``_txn_applied``) race-free: checked against the exact parent
     the commit will attempt on, any same-app commit either already
     sits in that chain (check catches it) or lands concurrently at
     parent+1 (the attempt then raises VersionConflict and the rebase
@@ -1488,8 +1469,8 @@ def last_txn_version(path: str, app: str,
     A vacuum that dropped every manifest carrying the app's txn would
     silently reset the mark (a very late replay would then re-apply),
     so ``vacuum_versioned`` preserves each app's max in a
-    ``_txn_hw.json`` sidecar, folded in here — the same protection the
-    stream batch high-water marks get."""
+    ``_txn_hw.json`` sidecar, folded in here. Stream sinks' batch ids
+    are txn pairs too, so this one sidecar keeps their marks as well."""
     best = None
     sidecar = os.path.join(path, _TXN_HW_FILE)
     if os.path.exists(sidecar):
@@ -1508,44 +1489,25 @@ def last_txn_version(path: str, app: str,
     return best
 
 
-_STREAM_HW_FILE = "_stream_hw.json"
-
-
 def last_stream_batch(path: str, stream_id: str = "default") -> int | None:
     """Largest batch id committed for ``stream_id`` (the exactly-once
-    high-water mark), or None for a table that stream never wrote.
-    Batch ids are monotone in commit order for a single writing stream,
-    so the scan walks manifests NEWEST-first and stops at the first one
-    bearing this stream's id — O(1) per micro-batch in the steady state
-    (the latest commit is the stream's own), never O(table history).
-    A vacuum that dropped every manifest carrying the id would
-    otherwise silently reset the mark (re-ingesting the replayed
-    epoch), so vacuum_versioned preserves the max per stream in a
-    ``_stream_hw.json`` sidecar, folded in here."""
-    best = None
-    sidecar = os.path.join(path, _STREAM_HW_FILE)
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            best = json.load(f).get(stream_id)
-    for v in reversed(_versions(path)):
-        man = _read_manifest_meta(path, v)
-        if man.get("stream_id", "default") == stream_id:
-            b = man.get("stream_batch_id")
-            if b is not None:
-                return b if best is None else max(b, best)
-    return best
+    mark), or None for a table that stream never wrote: the stream's
+    txn pair ``("stream:<stream_id>", batch_id)``, read through
+    ``last_txn_version`` (O(1) per micro-batch in the steady state,
+    and kept across vacuum by its ``_txn_hw.json`` fold)."""
+    return last_txn_version(path, f"stream:{stream_id}")
 
 
 def versioned_stream_writer(path: str, stream_id: str = "default"):
     """foreachBatch sink committing each micro-batch as a versioned
     APPEND — exactly-once on top of at-least-once batch delivery: the
-    manifest records (stream_id, batch_id), and a replayed batch
-    (restart from an INTACT checkpoint re-delivers the last epoch) is
-    SKIPPED when its id is <= the committed high-water mark.
-    Single-writer per (table, stream_id), so the idempotence check and
-    the commit cannot race; a crash between data-dir write and manifest
-    publish leaves an orphan attempt dir and the replay re-commits
-    cleanly.
+    commit carries the txn pair ``("stream:<stream_id>", batch_id)``,
+    and a replayed batch (restart from an INTACT checkpoint re-delivers
+    the last epoch) is SKIPPED by ``append_versioned``'s txn check,
+    before any write, when its id is <= the stream's mark. A racing
+    twin sharing the stream_id loses the commit race and returns; a
+    crash between data-dir write and manifest publish leaves an orphan
+    attempt dir and the replay re-commits cleanly.
 
     Checkpoint-LOSS contract (the Delta txn-appId shape): batch ids are
     only monotone per checkpoint. If the checkpoint is lost and the
@@ -1565,16 +1527,16 @@ def versioned_stream_writer(path: str, stream_id: str = "default"):
 
 
 def _stream_sink(path: str, stream_id: str, commit):
-    """foreachBatch shell of every versioned sink: skip a replayed batch
-    (id <= the high-water mark), else ``commit(batch_df, batch_id,
-    extra, txn)`` with the id riding the commit itself. The txn
-    identifiers back the hw check under RACES: two queries sharing a
-    stream_id both pass the hw read, but the loser's rebasing commit
-    finds the winner's (app, batch) in the chain and aborts."""
+    """foreachBatch shell of every versioned sink: ``commit(batch_df,
+    batch_id, extra, txn)`` with the id riding the commit itself — as
+    ``stream_id``/``stream_batch_id`` in the manifest (for ``history``)
+    and as the txn pair ``("stream:<stream_id>", batch_id)``, the one
+    exactly-once mark. The commit's own txn check skips a replayed
+    batch before any write or scan (``append_versioned`` before its
+    data-dir write, ``merge_versioned``/``apply_cdc`` in
+    ``_keyed_parent`` before any job), and under a race the loser's
+    commit finds the winner's pair and returns."""
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        hw = last_stream_batch(path, stream_id)
-        if hw is not None and batch_id <= hw:
-            return
         commit(batch_df, batch_id,
                {"stream_batch_id": int(batch_id), "stream_id": stream_id},
                (f"stream:{stream_id}", int(batch_id)))
@@ -1588,8 +1550,8 @@ def versioned_stream_merger(path: str, on: str | list[str],
     (``merge_versioned``) instead of a blind append — the streaming
     UPSERT: a CDC feed where later events supersede earlier rows by
     key lands as replace-or-insert, one copy-on-write commit per
-    micro-batch. Exactly-once via the same (stream_id, batch_id)
-    high-water protocol as ``versioned_stream_writer`` — and the merge
+    micro-batch. Exactly-once via the same (stream_id, batch_id) txn
+    mark as ``versioned_stream_writer`` — and the merge
     itself is idempotent by key on top of that, so even the
     window between a published commit and a crashed checkpoint
     advance (where the batch REPLAYS and the id check alone decides)
@@ -1964,28 +1926,6 @@ def _quantile_surrogates(
             )
             surrogates.append(F.coalesce(bucket.cast("bigint"), F.lit(0)))
     return staging, surrogates
-
-
-def _bisect_bucket_expr(name: str, cuts: list[float]):
-    """``Σ (v >= b_i)`` over SORTED cuts as a nested-IF binary search —
-    the same bucket id for EVERY input (it is searchsorted-right, which
-    the monotone compare-sum also computes; a NULL value's NULL
-    comparisons take every else-branch down to leaf 0, matching the
-    old sum's NULL→coalesce→0; Spark orders NaN above everything, so
-    NaN descends right to leaf ``len(cuts)``, exactly the all-true
-    sum) — but evaluated in O(log n) comparisons per row instead of n.
-    The flat n-term sum was measured 30× slower than the scan it rode
-    on: its generated method exceeds HotSpot's JIT size threshold, so
-    every row paid n bytecode-interpreted compare+cast+adds. One
-    parsed expression, double literals via the exact ``D`` spelling."""
-    def node(lo: int, hi: int) -> str:
-        if lo == hi:
-            return str(lo)
-        mid = (lo + hi) // 2
-        return (f"IF(`{name}` >= {cuts[mid]!r}D, "
-                f"{node(mid + 1, hi)}, {node(lo, mid)})")
-
-    return F.expr(node(0, len(cuts)))
 
 
 def _relayout(
@@ -2583,34 +2523,33 @@ def evolve_schema(path: str, schema) -> int:
     parent = latest_version(path)
     if parent is None:
         raise FileNotFoundError(f"no versioned table at {path}")
-    for _ in range(_MAX_COMMIT_RETRIES):
-        prev = _read_manifest(path, parent)
-        merged = _merge_schemas(prev["schema"], schema_json)
-        if json.loads(merged) == json.loads(prev["schema"]):
-            return parent  # nothing to evolve — idempotent no-op
-        assigned = _assign_physical_slots(prev, merged)
-        added = [f["name"] for f in json.loads(merged)["fields"]
-                 if f["name"] not in
-                 {g["name"] for g in json.loads(prev["schema"])["fields"]}]
-        widened = sorted(
-            f["name"] for f in json.loads(merged)["fields"]
-            for g in json.loads(prev["schema"])["fields"]
-            if g["name"] == f["name"] and g["type"] != f["type"])
-        extra = {"evolved": {"added": added, "widened": widened}}
-        if assigned or _col_mapping(prev):
-            extra["column_mapping"] = {**_col_mapping(prev), **assigned}
-        try:
-            return _commit(path, "alter", list(prev["files"]), merged,
-                           parent, extra)
-        except VersionConflict:
-            # metadata-only and idempotent: re-merge against the
-            # winner and retry (slots re-assigned fresh — nothing was
-            # written under the old assignment)
-            parent = latest_version(path)
-    raise VersionConflict(
-        f"evolve_schema on {path}: exceeded {_MAX_COMMIT_RETRIES} "
-        "rebase attempts under sustained concurrent writes"
-    )
+
+    def attempt_on(man: dict) -> tuple | None:
+        merged = _merge_schemas(man["schema"], schema_json)
+        if json.loads(merged) == json.loads(man["schema"]):
+            return None  # nothing to evolve — idempotent no-op
+        assigned = _assign_physical_slots(man, merged)
+        old = {g["name"]: g["type"]
+               for g in json.loads(man["schema"])["fields"]}
+        fields = json.loads(merged)["fields"]
+        extra = {"evolved": {
+            "added": [f["name"] for f in fields if f["name"] not in old],
+            "widened": sorted(f["name"] for f in fields
+                              if f["name"] in old
+                              and old[f["name"]] != f["type"])}}
+        if assigned or _col_mapping(man):
+            extra["column_mapping"] = {**_col_mapping(man), **assigned}
+        return "alter", list(man["files"]), merged, extra, None
+
+    prev = _read_manifest(path, parent)
+    first = attempt_on(prev)
+    if first is None:
+        return parent
+    # metadata-only: a lost race re-merges against the winner (slots
+    # re-assigned fresh — nothing was written under the old assignment),
+    # and a winner that already covers the schema is the answer
+    return _commit_with_rebase(path, parent, prev, first,
+                               lambda _p, _b, _v, winner: attempt_on(winner))
 
 
 def drop_constraint(path: str, name: str) -> int:
@@ -2660,13 +2599,8 @@ def _keyed_parent(path: str, extra: dict | None, txn: tuple | None):
     parent = latest_version(path)
     if parent is None:
         raise FileNotFoundError(f"no versioned table at {path}")
-    if txn is not None:
-        extra = {**(extra or {}), "txn_app": txn[0],
-                 "txn_version": int(txn[1])}
-        last = last_txn_version(path, txn[0], version=parent)
-        if last is not None and last >= int(txn[1]):
-            return parent, None, extra
-    return parent, _read_manifest(path, parent), extra
+    extra, applied = _txn_applied(path, parent, extra, txn)
+    return parent, None if applied else _read_manifest(path, parent), extra
 
 
 def _key_probe(per_key: DataFrame, keys: list[str], *aggs):
@@ -3012,8 +2946,8 @@ def versioned_stream_cdc(path: str, on: str | list[str],
                          stream_id: str = "default"):
     """foreachBatch sink applying each micro-batch as ONE atomic CDC
     commit (``apply_cdc``) — the streaming change-data consumer.
-    Exactly-once via the (stream_id, batch_id) high-water protocol;
-    the id rides the CDC commit itself. The table must exist (CDC is
+    Exactly-once via the (stream_id, batch_id) txn mark, which rides
+    the CDC commit itself. The table must exist (CDC is
     change capture — bootstrap the initial snapshot with
     ``write_versioned`` or the append writer first)."""
     keys = [on] if isinstance(on, str) else list(on)
@@ -3519,8 +3453,8 @@ def appended_since(
 
 def _relay_state(path: str, stream_id: str) -> int | None:
     """Newest ``relay_src_version`` committed to ``path`` for this
-    relay stream — walked newest-first like the stream high-water
-    mark, O(1) in the steady state (the latest commit is the relay's
+    relay stream — walked newest-first like ``last_txn_version``,
+    O(1) in the steady state (the latest commit is the relay's
     own)."""
     v = latest_version(path)
     while v is not None:
@@ -4316,8 +4250,8 @@ def clone_versioned(src_path: str, dst_path: str,
     (experiment, backfill-rehearsal, migration test) for the cost of
     its manifest — Delta/Iceberg shallow-clone economics WITHOUT the
     dangling-reference hazard (a vacuum on the source can never break
-    the clone, because the clone holds its own links). Stream batch /
-    transaction high-water marks are deliberately NOT carried: the
+    the clone, because the clone holds its own links). Transaction
+    marks (stream batch ids included) are deliberately NOT carried: the
     clone is a NEW table — point a stream at it with a fresh
     checkpoint (re-pointing an existing exactly-once writer at a clone
     and expecting its marks is the classic CLONE footgun).
@@ -4462,15 +4396,16 @@ def vacuum_versioned(path: str, keep_last: int | None = None,
     it from colliding with the retry, and this pass reclaims it). With
     ``keep_last=k``, also drops manifests older than the newest k and
     deletes data files no RETAINED manifest references. Never touches a
-    file a kept version can still read, and PRESERVES each stream's
-    batch high-water mark in a ``_stream_hw.json`` sidecar before its
-    manifests drop (otherwise a post-vacuum restart would re-ingest the
-    replayed epoch — duplicate rows under an exactly-once contract).
+    file a kept version can still read, and PRESERVES each txn app's
+    mark — stream sinks' batch ids included — in a ``_txn_hw.json``
+    sidecar before its manifests drop (otherwise a post-vacuum restart
+    would re-ingest the replayed epoch — duplicate rows under an
+    exactly-once contract).
 
     ``dry_run=True`` (Delta's VACUUM DRY RUN): report EXACTLY what a
     real run would reclaim — same counters, same walk — plus
     ``bytes_reclaimable``, deleting nothing and writing nothing (the
-    high-water sidecar folds are skipped too). At 100 TB you preview a
+    txn-mark sidecar fold is skipped too). At 100 TB you preview a
     retention change's blast radius before committing to it; the
     destructive run is a second, explicit call.
 
@@ -4542,13 +4477,8 @@ def vacuum_versioned(path: str, keep_last: int | None = None,
             man = _read_manifest(path, v)
             referenced.update(man["files"])
             referenced.update(man.get("dv_files") or [])
-        # fold dropped manifests' stream high-water marks into the
-        # sidecar BEFORE removing them
-        hw: dict[str, int] = {}
-        sidecar = os.path.join(path, _STREAM_HW_FILE)
-        if os.path.exists(sidecar):
-            with open(sidecar) as f:
-                hw = json.load(f)
+        # fold dropped manifests' txn marks (stream batch ids included)
+        # into the sidecar BEFORE removing them
         txn_hw: dict[str, int] = {}
         txn_sidecar = os.path.join(path, _TXN_HW_FILE)
         if os.path.exists(txn_sidecar):
@@ -4557,20 +4487,10 @@ def vacuum_versioned(path: str, keep_last: int | None = None,
         for v in vs:
             if v in keep:
                 continue
-            man = _read_manifest(path, v)
-            b = man.get("stream_batch_id")
-            if b is not None:
-                sid = man.get("stream_id", "default")
-                hw[sid] = max(b, hw.get(sid, b))
-            # transaction identifiers get the same drop protection
+            man = _read_manifest_meta(path, v)
             app, tver = man.get("txn_app"), man.get("txn_version")
             if app is not None and tver is not None:
                 txn_hw[app] = max(tver, txn_hw.get(app, tver))
-        if hw and not dry_run:
-            tmp = sidecar + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(hw, f)
-            os.replace(tmp, sidecar)
         if txn_hw and not dry_run:
             tmp = txn_sidecar + ".tmp"
             with open(tmp, "w") as f:

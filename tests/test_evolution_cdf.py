@@ -411,6 +411,86 @@ def test_rebase_refuses_concurrent_same_column_evolution(spark, tmp_path):
     assert V.read_versioned(spark, t).filter("v IS NOT NULL").count() == 3
 
 
+def test_rebase_refuses_plain_append_over_readded_column(spark, tmp_path):
+    """A plain append racing a drop_column + re-add of a batch column:
+    the schema still matches, but the re-added column lives in a fresh
+    slot, so the batch's already-written values would read as NULL.
+    Must surface VersionConflict."""
+    from lazy_frame_spark.sources import versioned as V
+
+    t = str(tmp_path / "race_readd")
+    V.write_versioned(_rows(spark, 0, 4), t)
+
+    def winner():
+        V.drop_column(spark, t, "v")
+        V.evolve_schema(t, "v double")
+
+    with pytest.raises(V.VersionConflict, match="mapping ground"):
+        _race(spark, V, t, _rows(spark, 4, 6), winner, merge_schema=False)
+    got = V.read_versioned(spark, t)
+    assert got.count() == 4 and got.filter("v IS NOT NULL").count() == 0
+
+
+def _lose_one_race(V, action, winner, call):
+    """Run ``call()`` with its first ``action`` commit losing an
+    injected race to ``winner()`` — returns what ``call`` returns."""
+    real_commit = V._commit
+    state = {"fired": False}
+
+    def inject(path, action_, files, schema_json, parent,
+               extra=None, dvs=None):
+        if not state["fired"] and action_ == action:
+            state["fired"] = True
+            V._commit = real_commit
+            winner()
+            V._commit = inject
+            raise V.VersionConflict("injected race")
+        return real_commit(path, action_, files, schema_json, parent,
+                           extra, dvs)
+
+    V._commit = inject
+    try:
+        return call()
+    finally:
+        V._commit = real_commit
+
+
+def test_evolve_schema_rebases_over_concurrent_append(spark, tmp_path):
+    """evolve_schema losing its commit to a concurrent append re-merges
+    against the winner and lands on top: the winner's rows are kept
+    and read the new column as NULL."""
+    from lazy_frame_spark.sources import versioned as V
+
+    t = str(tmp_path / "race_evolve_append")
+    V.write_versioned(_rows(spark, 0, 4), t)                     # v1
+    v = _lose_one_race(
+        V, "alter", lambda: V.append_versioned(_rows(spark, 4, 6), t),
+        lambda: V.evolve_schema(t, "q long"))
+    assert v == 3 and V.latest_version(t) == 3
+    man = V._read_manifest(t, 3)
+    assert man["action"] == "alter"
+    assert man["evolved"] == {"added": ["q"], "widened": []}
+    assert set(V._read_manifest(t, 2)["files"]) <= set(man["files"])
+    got = V.read_versioned(spark, t)
+    assert got.columns == ["k", "v", "flag", "q"]
+    assert got.count() == 6 and got.filter("q IS NULL").count() == 6
+
+
+def test_evolve_schema_concurrent_same_evolution_is_the_answer(
+        spark, tmp_path):
+    """evolve_schema losing its commit to a concurrent evolve of the
+    same column returns the winner's version without committing."""
+    from lazy_frame_spark.sources import versioned as V
+
+    t = str(tmp_path / "race_evolve_twin")
+    V.write_versioned(_rows(spark, 0, 4), t)                     # v1
+    v = _lose_one_race(
+        V, "alter", lambda: V.evolve_schema(t, "q long"),
+        lambda: V.evolve_schema(t, "q long"))
+    assert v == 2 and V.latest_version(t) == 2
+    assert V.read_versioned(spark, t).columns == ["k", "v", "flag", "q"]
+
+
 # ---------------------------------------------------------------------------
 # clone observability
 # ---------------------------------------------------------------------------

@@ -269,6 +269,23 @@ def test_row_range_py4j_calls_independent_of_width(spark, iris_csv, wide_csv,
     assert counts[0] <= PY4J_ROW_RANGE_BUDGET, counts
 
 
+def test_close_keeps_the_callers_pin(spark):
+    """close() releases the row index the frame built, never a pin the
+    caller took on the DataFrame it handed to from_df."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.range(50).toDF("a").persist()
+    df.count()
+    n = cache.numCachedEntries()
+    LazyFrame.from_df(df).close()  # untouched: holds no pin of its own
+    assert df.is_cached and cache.numCachedEntries() == n
+    lf = LazyFrame.from_df(df)
+    lf.row_range(1, 3).to_pandas()  # builds and pins the row index
+    assert cache.numCachedEntries() == n + 1
+    lf.close()
+    assert df.is_cached and cache.numCachedEntries() == n
+    df.unpersist()
+
+
 def test_indexed_root_nrow_dim_run_no_job(spark, wide_csv):
     lf = LazyFrame.open(spark, wide_csv)
     lf.row_range(1, 3).to_pandas()  # the build counts N

@@ -1624,6 +1624,45 @@ def test_versioned_stream_high_water_survives_vacuum(spark, tmp_path):
     assert V.last_stream_batch(t, "other") is None
 
 
+def test_versioned_stream_replay_runs_no_job(spark, tmp_path):
+    """A replayed batch id is skipped by the commit's own txn check
+    before any write or scan: for the append, MERGE and CDC sinks the
+    replay submits no Spark job, writes no data directory and commits
+    nothing."""
+    import os
+    import uuid
+
+    from lazy_frame_spark.sources import versioned as V
+
+    def jobs(fn) -> int:
+        sc = spark.sparkContext
+        group = f"lfs-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "stream replay test")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sinks = [
+        ("append", V.versioned_stream_writer, _vt_rows(spark, 10, 14)),
+        ("merge", lambda t: V.versioned_stream_merger(t, "k"),
+         _vt_rows(spark, 2, 6, flag="b")),
+        ("cdc", lambda t: V.versioned_stream_cdc(t, "k"),
+         _vt_rows(spark, 2, 4, flag="c").withColumn("op", F.lit("update"))),
+    ]
+    for name, sink, batch in sinks:
+        t = str(tmp_path / name)
+        V.write_versioned(_vt_rows(spark, 0, 10), t)
+        sink(t)(batch, 0)
+        v = V.latest_version(t)
+        data = sorted(os.listdir(os.path.join(t, "data")))
+        assert jobs(lambda: sink(t)(batch, 0)) == 0, name
+        assert V.latest_version(t) == v, name
+        assert sorted(os.listdir(os.path.join(t, "data"))) == data, name
+        assert V.last_stream_batch(t) == 0, name
+
+
 def test_versioned_cluster_commit_tightens_file_stats(spark, tmp_path):
     """cluster_versioned: same rows before/after (logical no-op), the
     pre-cluster version stays readable, and the rewritten files carry
