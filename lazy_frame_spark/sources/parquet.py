@@ -9,9 +9,18 @@ key once, join shuffle-free forever after).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: default size of the files a compaction or rewrite packs rows into
+TARGET_FILE_MB = 128
+
+
+def n_files(nbytes: int, target_mb: float = TARGET_FILE_MB) -> int:
+    """Files ``nbytes`` fill at ``target_mb`` per file (at least one)."""
+    return max(1, math.ceil(nbytes / (target_mb * 1024 * 1024)))
 
 
 def _partition_columns(path: str) -> list[str]:
@@ -308,7 +317,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 def compact_parquet(
     spark: SparkSession,
     path: str,
-    target_mb: int = 128,
+    target_mb: int = TARGET_FILE_MB,
     out_path: str | None = None,
 ) -> "DataFrame":
     """Small-file compaction — the maintenance pass every long-lived
@@ -321,7 +330,6 @@ def compact_parquet(
     In-place compaction writes to a temp sibling then swaps, so a
     failure mid-rewrite never leaves the table truncated. Returns the
     compacted frame."""
-    import math
     import os
 
     recover_table(path)
@@ -334,7 +342,7 @@ def compact_parquet(
             total += os.path.getsize(p)
         except OSError:
             pass
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+    n_out = n_files(total, target_mb)
     swap = out_path is None
     dest = f"{path.rstrip('/')}" + "__compact_tmp" if swap else out_path
     df.repartition(n_out).write.mode("overwrite").parquet(dest)
@@ -482,7 +490,7 @@ def delete_keys(
 def compact_partitions(
     spark: SparkSession,
     path: str,
-    target_mb: int = 128,
+    target_mb: int = TARGET_FILE_MB,
     min_files: int = 4,
 ) -> "DataFrame":
     """Partition-scoped small-file compaction: rewrite ONLY the hive
@@ -497,7 +505,6 @@ def compact_partitions(
     Candidate selection is a pure listdir/stat walk (no data jobs);
     each rewrite is one pruned read + coalesce + write per touched
     partition. Returns the table re-read."""
-    import math
     import os
     import shutil
 
@@ -515,7 +522,7 @@ def compact_partitions(
             if f.endswith(".parquet") and not f.startswith("_")
         ]
         total = sum(os.path.getsize(f) for f in files)
-        n_opt = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
+        n_opt = n_files(total, target_mb)
         if len(files) > max(min_files, n_opt):
             touched.append((rel, n_opt))
     if not touched:

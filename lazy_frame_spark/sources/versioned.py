@@ -88,8 +88,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lazy_frame_spark.pins import pin_scope
+from lazy_frame_spark.plans.parallel import estimated_bytes
 from lazy_frame_spark.rowid import _bisect_bucket_expr
 from lazy_frame_spark.sources import filestats
+from lazy_frame_spark.sources.parquet import TARGET_FILE_MB, n_files
 
 __all__ = [
     "VersionConflict",
@@ -457,15 +459,6 @@ def _commit_keyed_with_rebase(
                                rebase)
 
 
-#: maintenance rewrites at or under this estimated size get an AQE
-#: REBALANCE before the write (right-sized output files — locally one
-#: file instead of one near-empty file per upstream partition; the same
-#: optimized-writes trade table formats make for MERGE). Above the cap
-#: the input partitioning is kept: a large rewrite's inputs are the
-#: touched files themselves, already at target file size, and a second
-#: full shuffle of terabytes buys nothing. Unmeasured guess (16 GiB).
-_REBALANCE_MAX_BYTES = 16 * 1024 ** 3
-
 #: keyed-maintenance batches whose validation probe counted at most
 #: this many rows get an explicit broadcast hint on their distinct-key
 #: side (distinct keys ≤ batch rows, and key tuples are narrow), so
@@ -476,18 +469,6 @@ _REBALANCE_MAX_BYTES = 16 * 1024 ** 3
 #: batches above the gate keep the planner's estimate-driven choice.
 #: Unmeasured guess.
 _KEYS_BCAST_MAX_ROWS = 2_000_000
-
-
-def _local_bytes(path: str, rel_files: list[str] | set) -> int:
-    """Total on-disk bytes of table-relative files — the driver-side
-    size estimate for a rewrite (0 on any error: estimate only)."""
-    n = 0
-    for rel in rel_files:
-        try:
-            n += os.path.getsize(os.path.join(path, rel))
-        except OSError:
-            pass
-    return n
 
 
 def _touched_files(spark: SparkSession, path: str, prev: dict, match,
@@ -513,9 +494,10 @@ def _rewrite_stats(touched, carried, new_files, **counters) -> dict:
 
 
 def _write_data_dir(df: DataFrame, path: str, version: int,
-                    mapping: dict | None = None,
-                    size_hint: int | None = None) -> list[str]:
-    """Write df's rows as one immutable data directory; returns the new
+                    mapping: dict | None = None) -> list[str]:
+    """Write df's rows as one immutable data directory, one file per
+    non-empty partition of ``df`` (no exchange is added: a rewrite of
+    touched files keeps the partitions its plan gives them); returns the new
     parquet files' table-relative paths. The directory appears under
     its final name only when complete (write to dot-temp, one rename),
     so readers/vacuum never see a partial directory. ``mapping`` is
@@ -533,13 +515,6 @@ def _write_data_dir(df: DataFrame, path: str, version: int,
     by vacuum_versioned."""
     if mapping:
         df = _to_physical(df, mapping)
-    if size_hint is not None and size_hint <= _REBALANCE_MAX_BYTES:
-        # keyed-maintenance rewrite proven small: REBALANCE lets AQE
-        # size the write's partitions by bytes instead of inheriting
-        # the union of scan splits + cached-plan partitioning
-        # (measured: a 451-op CDC apply wrote 36 near-empty files;
-        # 1-5 with the hint). Content unchanged — layout only.
-        df = df.hint("rebalance")
     rel_final = os.path.join(
         "data", f"{version:08d}-{uuid.uuid4().hex[:8]}"
     )
@@ -1672,12 +1647,8 @@ def delete_versioned(
     survivors = _read_snapshot(
         spark, path, prev, files=sorted(touched)
     ).filter(~F.coalesce(pred, F.lit(False)))
-    # CoW rewrite size is bounded by the touched files themselves
-    # (survivors ⊆ touched rows) — same right-sizing rationale as the
-    # MERGE/CDC writes (_write_data_dir size_hint)
     new_files = _write_data_dir(survivors, path, version,
-                                mapping=_col_mapping(prev),
-                                size_hint=_local_bytes(path, touched))
+                                mapping=_col_mapping(prev))
     before = _footer_rows(path, sorted(touched))
     after = _footer_rows(path, new_files)
     v = _commit(
@@ -1696,7 +1667,7 @@ def delete_versioned(
 def compact_versioned(
     spark: SparkSession,
     path: str,
-    target_mb: int = 128,
+    target_mb: int = TARGET_FILE_MB,
     small_mb: int = 8,
     where: list | None = None,
 ) -> tuple[int, dict]:
@@ -1751,7 +1722,7 @@ def compact_versioned(
     # masking none of the new version's files (_commit's inheritance)
     df = _read_snapshot(spark, path, prev, files=small)
     total = sum(os.path.getsize(os.path.join(path, rel)) for rel in small)
-    n_out = max(1, int(total // (target_mb * 1024 * 1024)) + 1)
+    n_out = n_files(total, target_mb)
     new_files = _write_data_dir(df.coalesce(n_out), path, version,
                                 mapping=_col_mapping(prev))
     v = _commit_rewrite_with_rebase(path, "compact", parent, prev,
@@ -2709,21 +2680,21 @@ def _keyed_rewrite(
         _validate_constraints(
             landing, prev.get("constraints") or {},
             "apply_cdc" if mode == "cdc" else "merge_versioned")
-        parts.append(landing.select(
-            *[f.name for f in _committed_schema(prev).fields]))
+        # the survivors keep their scan partitions; only the landing
+        # rows are packed, by Catalyst's size of them: the pinned
+        # batch's cached bytes once the probe has run (in-memory bytes
+        # overstate parquet's, so files land under the target), so a
+        # small batch lands as one file, not one per batch partition
+        landing = landing.select(
+            *[f.name for f in _committed_schema(prev).fields])
+        nbytes = estimated_bytes(landing)
+        parts.append(landing if nbytes is None
+                     else landing.coalesce(n_files(nbytes)))
     new_files: list[str] = []
     if parts:
         new_data = functools.reduce(lambda a, b: a.unionByName(b), parts)
-        # rewrite size ≈ touched files (survivors ⊆ touched, and the
-        # replace shape re-lands roughly the touched rows — 2× margin)
-        # plus the landing rows, estimated from the probe's row total at
-        # a conservative 256 B/row so a bulk insert-only batch at scale
-        # keeps its input partitioning instead of paying a full extra
-        # shuffle
-        new_files = _write_data_dir(
-            new_data, path, parent + 1, mapping=_col_mapping(prev),
-            size_hint=2 * _local_bytes(path, touched)
-            + (256 * n_rows if landing is not None else 0))
+        new_files = _write_data_dir(new_data, path, parent + 1,
+                                    mapping=_col_mapping(prev))
     # no new_files (nothing landed) leaves nothing for a concurrently
     # added constraint to gate
     v = _commit_keyed_with_rebase(path, "merge", parent, prev,
@@ -2985,11 +2956,8 @@ def purge_dvs(spark: SparkSession, path: str) -> tuple[int, dict]:
                    "dv_files_purged": len(dv_files)}
     version = parent + 1
     rewritten = _read_snapshot(spark, path, prev, files=sorted(affected))
-    # purge rewrite size is bounded by the affected files (survivors
-    # ⊆ affected rows) — same right-sizing as the MERGE/CDC writes
     new_files = _write_data_dir(rewritten, path, version,
-                                mapping=_col_mapping(prev),
-                                size_hint=_local_bytes(path, affected))
+                                mapping=_col_mapping(prev))
     v = _commit(path, "purge", carried + new_files, prev["schema"],
                 parent, dvs=[])
     return v, {"files_rewritten": len(affected),

@@ -42,6 +42,12 @@ def _same(a, b):
             and a.count() == b.count())
 
 
+def _footer_key_range(t, rel):
+    """``(lo, hi)`` of ``o_orderkey`` from one data file's footer."""
+    rec = filestats._file_stats(os.path.join(t, rel))["cols"]["o_orderkey"]
+    return filestats._decode(rec["lo"]), filestats._decode(rec["hi"])
+
+
 def _jobs(spark, fn):
     """Spark jobs ``fn()`` starts, counted through its own job group."""
     import uuid
@@ -910,13 +916,12 @@ class TestDeletionVectors:
         assert _same(after, o.filter(
             ~F.col("o_orderkey").between(0, 120)
             & ~F.col("o_orderkey").between(1300, 1499)))
-        # right-sized materialize: the rewrite may coalesce the
-        # affected files (size-gated AQE rebalance), so the table's
-        # file count can only shrink — never one-output-per-input
+        # the rewrite keeps the affected files' scan partitions and
+        # adds no exchange, so on this fixture the file count never grows
         assert len(man["files"]) <= 6
         # idempotent when nothing outstanding: carries exactly the
         # files the purge commit left (rewrite output, not input,
-        # counts — the rebalance makes the two differ)
+        # counts)
         v2, st2 = V.purge_dvs(spark, t)
         assert st2 == {"files_rewritten": 0,
                        "files_carried": len(man["files"]),
@@ -1886,14 +1891,15 @@ class TestKeyedMaintenanceStats:
                .withColumn("o_totalprice", F.col("o_totalprice") * 2))
         v, st = V.merge_versioned(spark, t, src, "o_orderkey")
         assert st["probe_jobs"] == 1
-        assert 1 <= st["files_written"] <= 5  # rebalance right-sizing
+        # survivors keep their scan partitions, the batch lands packed
+        assert 1 <= st["files_written"] <= 5
         assert st["files_rewritten"] >= 1
 
     def test_replicate_apply_stats_pin_probe_and_files(self, spark,
                                                        tmp_path):
         """The bench relay shape (replicate → apply_cdc): the CDC apply
-        runs ONE validation probe and its rebalanced write lands a
-        handful of files — the at-scale layout claim, verifiable."""
+        runs ONE validation probe and its write lands a handful of
+        files — the at-scale layout claim, verifiable."""
         src = str(tmp_path / "ks_src")
         dst = str(tmp_path / "ks_dst")
         o = _orders(spark).select("o_orderkey", "o_totalprice")
@@ -1915,6 +1921,95 @@ class TestKeyedMaintenanceStats:
         assert 1 <= st["files_written"] <= 5
         assert _same(V.read_versioned(spark, dst),
                      V.read_versioned(spark, src))
+
+    @staticmethod
+    def _merge_into_one_file(spark, t):
+        """A 6-file range-partitioned table and a merge, run in job
+        group ``t``, whose batch updates 20 keys of its third file and
+        inserts one key far past the table's top: ``(touched file's key
+        range, its row count, batch keys, version)``."""
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        V.write_versioned(o.repartitionByRange(6, "o_orderkey"), t)
+        ranges = sorted((_footer_key_range(t, f), f)
+                        for f in V._read_manifest(t, 1)["files"])
+        (lo, hi), touched = ranges[2]
+        rows = filestats._file_stats(os.path.join(t, touched))["rows"]
+        batch = (o.filter(F.col("o_orderkey").between(lo, hi))
+                 .orderBy("o_orderkey").limit(20)
+                 .withColumn("o_totalprice", F.lit(1.0))
+                 .unionByName(o.limit(1).withColumn(
+                     "o_orderkey", F.lit(ranges[-1][0][1] + 10 ** 6))))
+        keys = {r[0] for r in batch.select("o_orderkey").collect()}
+        sc = spark.sparkContext
+        sc.setJobGroup(t, "keyed rewrite layout test")
+        try:
+            v, st = V.merge_versioned(spark, t, batch, "o_orderkey")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert st["files_rewritten"] == 1
+        return (lo, hi), rows, keys, v
+
+    def test_merge_survivors_keep_touched_file_key_range(self, spark,
+                                                         tmp_path):
+        """The rewrite keeps the touched file's scan partition: every
+        new file holding a survivor (a touched-file row the batch does
+        not replace) stays inside the touched file's key range, so a
+        far insert never widens the survivors' skipping bounds."""
+        import pyarrow.parquet as pq
+
+        t = str(tmp_path / "ks_layout")
+        (lo, hi), _, keys, v = self._merge_into_one_file(spark, t)
+        new = set(V._read_manifest(t, v)["files"]) - set(
+            V._read_manifest(t, 1)["files"])
+        with_survivors = [
+            f for f in new
+            if set(pq.read_table(os.path.join(t, f), columns=["o_orderkey"])
+                   .column(0).to_pylist()) - keys]
+        assert with_survivors
+        for f in with_survivors:
+            flo, fhi = _footer_key_range(t, f)
+            assert lo <= flo and fhi <= hi, (f, flo, fhi, lo, hi)
+
+    def test_merge_shuffles_batch_not_rewritten_rows(self, spark, tmp_path):
+        """A keyed rewrite shuffles O(batch) records, not O(rewritten
+        rows): the shuffle-write records of the merge's jobs, read from
+        Spark's status store, stay below the touched file's rows."""
+        t = str(tmp_path / "ks_shuffle")
+        _, rows, _, _ = self._merge_into_one_file(spark, t)
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        shuffled = sum(
+            store.lastStageAttempt(sid).shuffleWriteRecords()
+            for jid in sc.statusTracker().getJobIdsForGroup(t)
+            for sid in sc.statusTracker().getJobInfo(jid).stageIds)
+        assert shuffled < rows, (shuffled, rows)
+
+    def test_merge_landing_files_follow_batch_bytes(self, spark, tmp_path,
+                                                    monkeypatch):
+        """A keyed commit packs its landing rows by the pinned batch's
+        measured bytes: one file at the default target, and one file per
+        batch partition once those bytes fill several targets."""
+        from lazy_frame_spark.sources import parquet as P
+
+        t = str(tmp_path / "ks_landing")
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        V.write_versioned(o, t)
+        top = o.agg(F.max("o_orderkey")).collect()[0][0]
+
+        def inserts(base):
+            return (o.limit(400).repartition(4)
+                    .withColumn("o_orderkey", F.col("o_orderkey") + base))
+
+        _, st = V.merge_versioned(spark, t, inserts(top + 1), "o_orderkey")
+        assert (st["files_rewritten"], st["files_written"]) == (0, 1)
+        # a 1 KiB target: the ~6 KB batch fills more targets than it has
+        # partitions, so the coalesce keeps all four
+        monkeypatch.setattr(V, "n_files",
+                            lambda nbytes: P.n_files(nbytes, 1 / 1024))
+        _, st = V.merge_versioned(spark, t, inserts(2 * top + 2), "o_orderkey")
+        assert (st["files_rewritten"], st["files_written"]) == (0, 4)
+        assert V.read_versioned(spark, t).count() == o.count() + 800
 
     def test_apply_cdc_empty_batch_is_metadata_only(self, spark,
                                                     tmp_path):

@@ -1199,6 +1199,19 @@ def test_versioned_compaction_commit(spark, tmp_path):
                    for n in os.listdir(os.path.join(t, "data")))
 
 
+def test_rewrite_file_count_rounds_up():
+    """Compactions and a keyed commit's landing rows write
+    ⌈bytes / target⌉ files, at least one: an input that is an exact
+    multiple of the target gets no extra, near-empty file."""
+    from lazy_frame_spark.sources.parquet import n_files
+
+    mib = 1024 * 1024
+    assert n_files(256 * mib, 128) == 2
+    assert n_files(256 * mib + 1, 128) == 3
+    assert n_files(256 * mib) == 2
+    assert n_files(0, 128) == 1
+
+
 def test_versioned_stream_writer_exactly_once(spark, tmp_path):
     """versioned_stream_writer: each micro-batch commits as an append
     with its batch id in the manifest; a REPLAYED batch (restart

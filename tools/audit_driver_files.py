@@ -111,7 +111,6 @@ def main() -> int:
     timed("prune_files_keep_all", lambda: filestats.prune_files(
         root, rels, [("k", ">=", 0)]), out)
     timed("table_detail", lambda: V.table_detail(root), out)
-    timed("local_bytes", lambda: V._local_bytes(root, rels), out)
     timed("footer_rows_sidecar", lambda: V._footer_rows(root, rels), out)
     timed("vacuum_dry_run", lambda: V.vacuum_versioned(
         root, keep_last=1, dry_run=True), out)

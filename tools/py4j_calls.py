@@ -4,8 +4,10 @@ Opens two generated CSVs with the default cached open, a 5-column and a
 27-column one (the reference's medium schema), builds the row index, and
 prints, per call, the py4j call (``c``) commands and all commands it
 sends, the Spark jobs it starts, the classes it compiles with Janino
-(the count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``) and
-its wall time. A
+(the count of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``), the
+milliseconds Janino spent compiling them (the ``CodeGenerator.compileTime``
+delta, summed over the driver and the local executors) and its wall
+time. A
 call whose py4j count grows with the frame's width builds one ``Column``
 per field somewhere on its path. Spark inlines primitive literals into
 generated code and caches compiled classes by their source, so a call
@@ -70,12 +72,14 @@ def main() -> None:
 
     compile_time = (spark._jvm.org.apache.spark.metrics.source
                     .CodegenMetrics.METRIC_COMPILATION_TIME())
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
 
-    def measure(fn) -> tuple[int, int, int, int, float]:
+    def measure(fn) -> tuple[int, int, int, int, float, float]:
         fn()  # the first call of a shape pays one-time lookups
         group = f"py4j-calls-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "py4j_calls")
         compiled = compile_time.getCount()
+        compile_ns = codegen.CodeGenerator.compileTime()
         sent.clear()
         t0 = time.perf_counter()
         try:
@@ -85,12 +89,13 @@ def main() -> None:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         compiled = compile_time.getCount() - compiled
-        return (calls, total,
-                len(sc.statusTracker().getJobIdsForGroup(group)), compiled, ms)
+        compile_ms = (codegen.CodeGenerator.compileTime() - compile_ns) / 1e6
+        return (calls, total, len(sc.statusTracker().getJobIdsForGroup(group)),
+                compiled, compile_ms, ms)
 
     with tempfile.TemporaryDirectory() as d:
         print(f"{'frame':>6} {'call':34} {'py4j_c':>6} {'all':>5} "
-              f"{'jobs':>4} {'compiled':>8} {'ms':>7}")
+              f"{'jobs':>4} {'compiled':>8} {'comp_ms':>7} {'ms':>7}")
         for wide in (False, True):
             path = os.path.join(d, f"w{wide:d}.csv")
             _write_csv(path, args.rows, wide)
@@ -114,9 +119,9 @@ def main() -> None:
                 "nrow()": lf.nrow,
             }
             for name, fn in calls.items():
-                c, total, jobs, compiled, ms = measure(fn)
+                c, total, jobs, compiled, compile_ms, ms = measure(fn)
                 print(f"{len(lf.columns):>4}col {name:34} {c:>6} {total:>5} "
-                      f"{jobs:>4} {compiled:>8} {ms:>7.1f}")
+                      f"{jobs:>4} {compiled:>8} {compile_ms:>7.1f} {ms:>7.1f}")
             lf.close()
     client.send_command = send
     spark.stop()
