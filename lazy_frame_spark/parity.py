@@ -2118,42 +2118,40 @@ def _zvalue_sql(cols: list[str], bits: int) -> str:
     )
 
 
-def _hilbert_sql(xe: str, ye: str, bits: int) -> tuple[str, str]:
-    """Render operators/layout.with_hilbert's unrolled iteration as a
-    DuckDB lateral-alias SELECT list; returns (select_list, final_col).
-    Identical per-level ops (shift/and/xor/flip/swap/mask), so the oracle
-    checks the Hilbert index bit-for-bit."""
+def _hilbert_sql(xe: str, ye: str, bits: int, src: str, carry: str) -> str:
+    """Render operators/layout.with_hilbert's unrolled iteration as
+    DuckDB SQL over ``src``: one nested SELECT per level, returning
+    ``carry`` and the index ``hd``. Each level reads only the previous
+    level's ``hx``/``hy``/``hd`` columns; a single SELECT list of lateral
+    aliases made DuckDB re-expand every earlier level at each one and
+    grew past 11 GB at sf0.01. Identical per-level ops
+    (shift/and/xor/flip/swap/mask), so the oracle checks the Hilbert
+    index bit-for-bit."""
     mask = (1 << bits) - 1
-    items = [
-        f"(({xe}) & {mask}) AS hx0",
-        f"(({ye}) & {mask}) AS hy0",
-        "0 AS hd0",
-    ]
-    lvl = 0
+    sql = (f"SELECT {carry}, (({xe}) & {mask}) AS hx, "
+           f"(({ye}) & {mask}) AS hy, 0 AS hd FROM {src}")
     for i in reversed(range(bits)):
         s = 1 << i
-        p, q = lvl, lvl + 1
-        items += [
-            f"((hx{p} >> {i}) & 1) AS rx{q}",
-            f"((hy{p} >> {i}) & 1) AS ry{q}",
-            f"(hd{p} + {s * s} * xor(rx{q} * 3, ry{q})) AS hd{q}",
-            f"((CASE WHEN ry{q} = 0 THEN (CASE WHEN rx{q} = 1 "
-            f"THEN {s - 1} - hy{p} ELSE hy{p} END) ELSE hx{p} END) & {s - 1}) AS hx{q}",
-            f"((CASE WHEN ry{q} = 0 THEN (CASE WHEN rx{q} = 1 "
-            f"THEN {s - 1} - hx{p} ELSE hx{p} END) ELSE hy{p} END) & {s - 1}) AS hy{q}",
-        ]
-        lvl += 1
-    return ", ".join(items), f"hd{lvl}"
+        rx, ry = f"((hx >> {i}) & 1)", f"((hy >> {i}) & 1)"
+        sql = (
+            f"SELECT {carry}, (hd + {s * s} * xor({rx} * 3, {ry})) AS hd, "
+            f"((CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
+            f"THEN {s - 1} - hy ELSE hy END) ELSE hx END) & {s - 1}) AS hx, "
+            f"((CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
+            f"THEN {s - 1} - hx ELSE hx END) ELSE hy END) & {s - 1}) AS hy "
+            f"FROM ({sql})"
+        )
+    return sql
 
 
-_HILBERT_LIST, _HILBERT_FINAL = _hilbert_sql("event_id % 256", "user_id % 256", 8)
+_HILBERT = _hilbert_sql("event_id % 256", "user_id % 256", 8, "events",
+                        "event_id")
 
 
 @query(
     "layout_hilbert",
     oracle=f"""
-    SELECT event_id, CAST({_HILBERT_FINAL} AS BIGINT) AS hval
-    FROM (SELECT event_id, {_HILBERT_LIST} FROM events)
+    SELECT event_id, CAST(hd AS BIGINT) AS hval FROM ({_HILBERT})
     """,
 )
 def layout_hilbert(spark, sf_dir):

@@ -297,9 +297,15 @@ def _txn_applied(path: str, as_of: int | None, extra: dict | None,
 
 def _commit_with_rebase(path: str, parent: int | None, prev: dict | None,
                         attempt: tuple, rebase) -> int:
-    """The ONE optimistic commit loop behind every versioned writer: a
-    commit either lands, rebases, or raises ``VersionConflict``, and is
-    never lost or applied twice. ``attempt`` is ``_commit``'s
+    """The one optimistic commit loop (snapshot, append, compact/cluster,
+    merge/CDC and ``evolve_schema``): a commit either lands, rebases, or
+    raises ``VersionConflict``, and is never lost or applied twice. The
+    other writers commit with a bare ``_commit`` and raise
+    ``VersionConflict`` on any lost race: every ``delete_versioned``
+    strategy, ``purge_dvs``, the metadata alters (``add_constraint``,
+    ``drop_constraint``, ``rename_column``, ``drop_column``),
+    ``restore_versioned`` and ``clone_versioned``'s table creation.
+    ``attempt`` is ``_commit``'s
     ``(action, files, schema_json, extra, dvs)`` built on ``parent``
     (manifest ``prev``; None for a table-creating attempt). On a lost
     race the loop re-reads the latest version: when the winner's chain
@@ -467,7 +473,10 @@ def _commit_keyed_with_rebase(
 #: and hoping AQE's runtime rewrite converts the join. 2M key tuples
 #: is tens of MB framed, far under the broadcast caps; bulk backfill
 #: batches above the gate keep the planner's estimate-driven choice.
-#: Unmeasured guess.
+#: Unmeasured guess. A batch on ``_key_probe``'s local route has a key
+#: side within the broadcast threshold by its gate, so this row cap
+#: decides only on the Spark probe's route (float or collated keys, an
+#: unknown or oversized estimate).
 _KEYS_BCAST_MAX_ROWS = 2_000_000
 
 
@@ -2574,45 +2583,132 @@ def _keyed_parent(path: str, extra: dict | None, txn: tuple | None):
     return parent, None if applied else _read_manifest(path, parent), extra
 
 
-def _key_probe(per_key: DataFrame, keys: list[str], *aggs):
-    """The keyed verbs' ONE validation job: one row carrying ``aggs``,
-    ``__dup__`` (max multiplicity over fully-non-NULL keys — NULL keys
-    never match, SQL semantics, so they are never duplicates),
-    ``__rows__`` and the key bounds (min/max over the group keys ==
-    min/max over the rows)."""
-    keys_nonnull = F.col(keys[0]).isNotNull()
-    for k in keys[1:]:
-        keys_nonnull = keys_nonnull & F.col(k).isNotNull()
-    return per_key.agg(
-        *aggs,
+#: key types whose equality and ordering Spark decides on the raw value,
+#: so a driver-side probe groups and bounds them exactly as Spark does
+#: (float/double group by Spark's NaN and -0.0 normalization, and a
+#: non-default collation by its collator: both keep the Spark probe)
+_BITWISE_KEY_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                      T.DecimalType, T.DateType, T.TimestampType,
+                      T.TimestampNTZType, T.BooleanType)
+
+
+def _local_probe_fits(key_cols: DataFrame) -> bool:
+    """True when every key type is bitwise and Catalyst's size estimate
+    of the key projection (no job) is within
+    ``spark.sql.autoBroadcastJoinThreshold``: the batches whose key side
+    Spark would broadcast anyway."""
+    if not all(isinstance(f.dataType, _BITWISE_KEY_TYPES)
+               or (type(f.dataType) is T.StringType
+                   and f.dataType.isUTF8BinaryCollation())
+               for f in key_cols.schema.fields):
+        return False
+    nbytes = estimated_bytes(key_cols)
+    limit = (key_cols.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    return nbytes is not None and nbytes <= limit
+
+
+def _arrow_py(value, dt: T.DataType):
+    """A pyarrow scalar as the Python value ``collect`` gives for ``dt``
+    (datetimes naive, as Spark's ``fromInternal`` makes them)."""
+    if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        return dt.fromInternal(value.value) if value.is_valid else None
+    return value.as_py()
+
+
+def _key_probe(batch: DataFrame, pin, keys: list[str], unique: bool,
+               op_col: str | None = None) -> tuple[dict, DataFrame]:
+    """The keyed verbs' ONE validation job over the pinned ``batch``:
+    ``(probe, key side)``. ``probe`` carries ``__rows__``, ``__dup__``
+    (max multiplicity over fully-non-NULL keys — NULL keys never match,
+    SQL semantics, so they are never duplicates), the key bounds
+    (``filestats.key_bounds_aggs`` names) and, for a CDC batch
+    (``op_col`` plus its normalized ``__op__``), ``__bad__`` (an unknown
+    op) and ``__ups__`` (an upsert row). A failed check's offender rides
+    along: ``__dup_key__`` (when ``unique``) and ``__bad_op__``. The key
+    side holds the batch's distinct keys, the build side of the
+    rewrite's joins.
+
+    A batch that passes ``_local_probe_fits`` collects its key columns
+    with one ``toArrow`` job and is probed on the driver. Its key side is
+    a local relation, which broadcasts with no job. Any other batch rolls
+    up a pinned per-key frame in Spark (group-by, pin and global
+    aggregate: five AQE jobs) whose keys are the key side; naming an
+    offender costs that route one job more."""
+    key_cols = batch.select(*keys)
+    fields = key_cols.schema.fields
+    if _local_probe_fits(key_cols):
+        import pyarrow.compute as pc
+
+        tbl = batch.select(*dict.fromkeys(
+            [*keys, *(("__op__", op_col) if op_col else ())])).toArrow()
+        probe = {"__rows__": tbl.num_rows}
+        for f in fields:
+            lo_hi = pc.min_max(tbl[f.name])
+            probe[f"__lo_{f.name}__"] = _arrow_py(lo_hi["min"], f.dataType)
+            probe[f"__hi_{f.name}__"] = _arrow_py(lo_hi["max"], f.dataType)
+        # positional names: no key can collide with the count column
+        pos = [f"k{i}" for i in range(len(keys))]
+        full = functools.reduce(pc.and_, [pc.is_valid(tbl[k]) for k in keys])
+        per_key = (tbl.select(keys).rename_columns(pos).filter(full)
+                   .group_by(pos).aggregate([([], "count_all")]))
+        probe["__dup__"] = pc.max(per_key["count_all"]).as_py()
+        dups = per_key.filter(pc.greater(per_key["count_all"], 1))
+        probe["__dup_key__"] = tuple(
+            _arrow_py(dups[p][0], f.dataType) for p, f in zip(pos, fields)
+        ) if unique and dups.num_rows else None
+        if op_col:
+            bad = pc.is_null(tbl["__op__"])
+            probe["__bad__"] = pc.any(bad).as_py()
+            probe["__bad_op__"] = (tbl[op_col].filter(bad)[0].as_py()
+                                   if probe["__bad__"] else None)
+            probe["__ups__"] = pc.any(
+                pc.equal(tbl["__op__"], "upsert")).as_py()
+        return probe, batch.sparkSession.createDataFrame(
+            per_key.select(pos).rename_columns(keys),
+            schema=key_cols.schema)
+
+    op_aggs = [
+        F.max(F.col("__op__").isNull().cast("int")).alias("__bad__"),
+        F.max((F.col("__op__") == "upsert").cast("int")).alias("__ups__"),
+    ] if op_col else []
+    per_key = pin(batch.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("__n__"), *op_aggs))
+    keys_nonnull = functools.reduce(
+        lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    probe = per_key.agg(
+        *[F.max(c).alias(c) for c in ("__bad__", "__ups__") if op_col],
         F.max(F.when(keys_nonnull, F.col("__n__"))).alias("__dup__"),
         F.sum("__n__").alias("__rows__"),
-        *filestats.key_bounds_aggs(keys)).collect()[0]
-
-
-def _dup_key(per_key: DataFrame, keys: list[str]) -> tuple:
-    """One fully-non-NULL key the batch carries more than once — the
-    failure path's extra job, so the error can name the offender."""
-    row = (per_key.dropna(subset=keys).filter(F.col("__n__") > 1)
-           .limit(1).collect()[0])
-    return tuple(row[k] for k in keys)
+        *filestats.key_bounds_aggs(keys)).collect()[0].asDict()
+    probe["__dup_key__"] = None
+    if unique and (probe["__dup__"] or 0) > 1:
+        row = (per_key.dropna(subset=keys).filter(F.col("__n__") > 1)
+               .limit(1).collect()[0])
+        probe["__dup_key__"] = tuple(row[k] for k in keys)
+    if op_col:
+        probe["__bad_op__"] = (
+            batch.filter(F.col("__op__").isNull()).limit(1).collect()[0][op_col]
+            if probe["__bad__"] else None)
+    return probe, per_key.select(*keys)
 
 
 def _keyed_rewrite(
     spark: SparkSession, pin, path: str,
-    parent: int, prev: dict, keys: list[str], per_key: DataFrame,
-    probe, landing: DataFrame | None, mode: str, extra: dict | None,
+    parent: int, prev: dict, keys: list[str], src_keys: DataFrame,
+    probe: dict, landing: DataFrame | None, mode: str, extra: dict | None,
     matched_only: bool = False,
 ) -> tuple[int, dict]:
     """The one commit path behind ``merge_versioned`` and ``apply_cdc``
     after their own validation: bounds pre-cut → discovery semi-join →
-    touched-file anti-join rewrite → keyed rebasing commit. The pinned
-    ``per_key`` rollup is the distinct-key side of every join (computed
-    once, not re-aggregated for ``distinct()`` — §2.4); ``probe`` is its
-    ``_key_probe`` row; ``landing`` the rows written beside the
-    survivors (None: survivors only), cut to matched keys when
-    ``matched_only``; ``pin`` the caller's ``pin_scope``, which also
-    holds the matched-only discovery hits."""
+    touched-file anti-join rewrite → keyed rebasing commit.
+    ``src_keys`` and ``probe`` come from ``_key_probe``: the batch's
+    distinct keys, the key side of every join (computed once, not
+    re-aggregated for ``distinct()`` — §2.4), and its validation
+    record. ``landing`` is the rows written beside the survivors (None:
+    survivors only), cut to matched keys when ``matched_only``; ``pin``
+    the caller's ``pin_scope``, which also holds the matched-only
+    discovery hits."""
     n_rows = int(probe["__rows__"] or 0)
     files = list(prev["files"])
     extra = {"merge_on": keys, "merge_mode": mode, **(extra or {})}
@@ -2635,7 +2731,7 @@ def _keyed_rewrite(
         # _KEYS_BCAST_MAX_ROWS) instead of waiting for an AQE conversion
         return F.broadcast(df) if n_rows <= _KEYS_BCAST_MAX_ROWS else df
 
-    src_keys = key_side(per_key.select(*keys))
+    src_keys = key_side(src_keys)
     # data-skipping pre-cut for the discovery scan: a file whose
     # commit-time key bounds don't intersect the batch's key bounds
     # provably contains no match — skip it before the scan. On the
@@ -2786,26 +2882,22 @@ def merge_versioned(
         # MERGE source too): the plan upstream of `source` — often a CDC
         # diff or a filtered table read — otherwise re-evaluates for the
         # validation probe, the distinct-key build, and the write.
-        # O(batch). The per-key frame is pinned as well: the probe rolls
-        # it up AND the rewrite joins on its keys. O(batch keys). The
-        # failure path re-probes to name an offending key — errors may
-        # pay one extra job; the happy path never does.
+        # O(batch). The probe's job builds the pin.
         source = pin(source)
-        per_key = pin(source.groupBy(*keys)
-                      .agg(F.count(F.lit(1)).alias("__n__")))
+        # delete mode allows duplicate keys and lands nothing: it writes
+        # the touched files' survivors only. A batch without a key
+        # column fails in the probe with Spark's own AnalysisException.
+        probe, src_keys = _key_probe(source, pin, keys, unique=update)
         if update:
             _check_append_schema(source, prev["schema"])
-        probe = _key_probe(per_key, keys)
-        if update and (probe["__dup__"] or 0) > 1:
+        if probe["__dup_key__"]:
             raise ValueError(
                 f"merge_versioned: source has duplicate keys on {keys} "
-                f"(e.g. {_dup_key(per_key, keys)}); the "
+                f"(e.g. {probe['__dup_key__']}); the "
                 "replacement row would be ambiguous — dedupe the batch"
             )
-        # delete mode allows duplicate keys and lands nothing: it writes
-        # the touched files' survivors only
         return _keyed_rewrite(
-            spark, pin, path, parent, prev, keys, per_key, probe,
+            spark, pin, path, parent, prev, keys, src_keys, probe,
             source if update else None, when_matched, extra,
             matched_only=update and not insert_unmatched)
 
@@ -2865,28 +2957,18 @@ def apply_cdc(
             .when(op_norm.isin("delete", "d"), "delete"),
         ))
         # ONE validation job instead of three probes + a bounds
-        # aggregate: per-key group counts feed a single-row rollup that
-        # also carries (a) any unknown op and (b) any upsert row (the
-        # delete-only-shape gate). O(batch keys). The failure paths
-        # re-probe to name the offending value — errors may pay one
-        # extra job; the happy path never does.
-        per_key = pin(tagged.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("__n__"),
-            F.max(F.col("__op__").isNull().cast("int")).alias("__bad__"),
-            F.max((F.col("__op__") == "upsert").cast("int"))
-            .alias("__ups__")))
-        probe = _key_probe(per_key, keys,
-                           F.max("__bad__").alias("__bad__"),
-                           F.max("__ups__").alias("__ups__"))
+        # aggregate: it also carries (a) any unknown op and (b) any
+        # upsert row (the delete-only-shape gate)
+        probe, src_keys = _key_probe(tagged, pin, keys, unique=True,
+                                     op_col=op_col)
         if probe["__bad__"]:
-            bad = tagged.filter(F.col("__op__").isNull()).limit(1).collect()
             raise ValueError(
-                f"apply_cdc: unknown op {bad[0][op_col]!r} in {op_col!r} — "
-                "expected insert/update/delete (or I/U/D)"
+                f"apply_cdc: unknown op {probe['__bad_op__']!r} in "
+                f"{op_col!r} — expected insert/update/delete (or I/U/D)"
             )
-        if (probe["__dup__"] or 0) > 1:
+        if probe["__dup_key__"]:
             raise ValueError(
-                f"apply_cdc: key {_dup_key(per_key, keys)} appears "
+                f"apply_cdc: key {probe['__dup_key__']} appears "
                 "more than once in the batch — compact to latest-per-key "
                 "upstream (the batch's internal order is not a contract "
                 "this engine can see)"
@@ -2909,7 +2991,7 @@ def apply_cdc(
         else:
             _check_append_schema(upserts, prev["schema"])
         return _keyed_rewrite(spark, pin, path, parent, prev, keys,
-                              per_key, probe, upserts, "cdc", extra)
+                              src_keys, probe, upserts, "cdc", extra)
 
 
 def versioned_stream_cdc(path: str, on: str | list[str],

@@ -2104,3 +2104,186 @@ class TestKeyedMaintenanceStats:
         assert set(V._read_manifest(t, 2)["files"]) <= set(man["files"])
         assert (V.read_versioned(spark, t, v).count()
                 == V.read_versioned(spark, t, 2).count())
+
+
+class TestLocalKeyProbe:
+    """The driver-side key probe of broadcast-sized keyed batches: one
+    ``toArrow`` job gives the same validation record, offenders and key
+    side as the Spark rollup, and every batch it may not take (float or
+    collated keys, an estimate over the broadcast threshold) keeps the
+    Spark probe with the same commit."""
+
+    @staticmethod
+    def _table(spark, t, key=None):
+        """A 4-file range-partitioned ``(k, o_totalprice)`` table over
+        orders, ``k`` = ``key(o_orderkey)``: ``(orders, k column)``."""
+        o = _orders(spark).select("o_orderkey", "o_totalprice")
+        k = (key or (lambda c: c))(F.col("o_orderkey")).alias("k")
+        V.write_versioned(
+            o.filter(F.col("o_orderkey") <= 1000).select(k, "o_totalprice")
+            .repartitionByRange(4, "k"), t)
+        return o, k
+
+    def test_offenders_named_by_the_one_probe_job(self, spark, tmp_path):
+        """A duplicate-key merge or CDC batch and an unknown op fail with
+        the offender in the message, and the failing call runs only the
+        probe's own job."""
+        t = str(tmp_path / "lp_err")
+        o, k = self._table(spark, t)
+        batch = (o.filter(F.col("o_orderkey").between(1, 8))
+                 .unionByName(o.filter(F.col("o_orderkey") == 7))
+                 .select(k, "o_totalprice"))
+        n, err = _jobs(spark, lambda: pytest.raises(
+            ValueError, V.merge_versioned, spark, t, batch, "k"))
+        assert n == 1 and "(e.g. (7,))" in str(err.value)
+        cdc = batch.withColumn("op", F.lit("U"))
+        n, err = _jobs(spark, lambda: pytest.raises(
+            ValueError, V.apply_cdc, spark, t, cdc, "k"))
+        assert n == 1 and "key (7,) appears" in str(err.value)
+        bad = cdc.withColumn(
+            "op", F.when(F.col("k") == 3, "zap").otherwise(F.col("op")))
+        n, err = _jobs(spark, lambda: pytest.raises(
+            ValueError, V.apply_cdc, spark, t, bad, "k"))
+        assert n == 1 and "unknown op 'zap'" in str(err.value)
+        assert V.latest_version(t) == 1
+
+    def test_null_keys_count_never_duplicate_never_match(self, spark,
+                                                         tmp_path):
+        """On the local route NULL keys are never duplicates, count in
+        ``rows_applied`` and match no table row (not even a NULL one)."""
+        import pandas as pd
+
+        t = str(tmp_path / "lp_null")
+        V.write_versioned(spark.createDataFrame(
+            [(None, 1.0), (1, 2.0), (2, 3.0)], "k long, v double"), t)
+        # pandas-built: a local relation with an exact size estimate
+        batch = spark.createDataFrame(pd.DataFrame({
+            "k": pd.array([None, None, 1, 9], dtype="Int64"),
+            "v": [10.0, 11.0, 20.0, 30.0]}))
+        assert V._local_probe_fits(batch.select("k"))
+        _, st = V.merge_versioned(spark, t, batch, "k")
+        assert st["rows_applied"] == 4
+        got = sorted(map(tuple, V.read_versioned(spark, t).collect()),
+                     key=repr)
+        # the table's NULL-key row survives, both batch NULL rows land
+        assert got == sorted([(None, 1.0), (None, 10.0), (None, 11.0),
+                              (1, 20.0), (2, 3.0), (9, 30.0)], key=repr)
+        cdc = spark.createDataFrame(pd.DataFrame({
+            "k": pd.array([None, None, 2], dtype="Int64"),
+            "v": [None, 5.0, 6.0], "op": ["D", "I", "U"]}))
+        assert V._local_probe_fits(cdc.select("k"))
+        _, st = V.apply_cdc(spark, t, cdc, "k")
+        assert st["rows_applied"] == 3
+        nulls = V.read_versioned(spark, t).filter(F.col("k").isNull())
+        assert sorted(r.v for r in nulls.collect()) == [1.0, 5.0, 10.0, 11.0]
+
+    @pytest.mark.parametrize("key", [
+        "bigint", "int", "string", "date", "timestamp", "decimal"])
+    def test_bounds_and_record_match_spark(self, spark, monkeypatch, key):
+        """The local record equals Spark's ``min``/``max`` and the Spark
+        probe's record, and both key sides hold the same keys."""
+        from lazy_frame_spark.pins import pin_scope
+
+        exprs = {
+            "bigint": "id * 1000003 - 50000000",
+            "int": "CAST(id - 40 AS INT)",
+            "string": "concat(CASE WHEN id % 7 = 0 THEN 'é' ELSE 'a' END,"
+                      " CAST(id AS STRING))",
+            "date": "date_add(DATE'1969-12-01', CAST(id * 11 AS INT))",
+            "timestamp": "timestamp_micros(id * 1234567891 - 50000000000)",
+            "decimal": "CAST((id - 50) / 8 AS DECIMAL(12, 3))",
+        }
+        ids = spark.range(100).unionByName(spark.range(7, 8))
+        batch = ids.selectExpr(f"{exprs[key]} AS k", "id AS v").unionByName(
+            spark.sql("SELECT NULL AS k, -1L AS v").selectExpr(
+                f"CAST(k AS {ids.selectExpr(exprs[key]).dtypes[0][1]}) AS k",
+                "v"))
+        spark_lo_hi = tuple(batch.agg(F.min("k"), F.max("k")).collect()[0])
+
+        def probe():
+            with pin_scope() as pin:
+                rec, side = V._key_probe(pin(batch), pin, ["k"], unique=True)
+                return rec, {r.k for r in side.collect() if r.k is not None}
+
+        assert V._local_probe_fits(batch.select("k"))
+        local, local_keys = probe()
+        assert (local["__lo_k__"], local["__hi_k__"]) == spark_lo_hi
+        monkeypatch.setattr(V, "_local_probe_fits", lambda key_cols: False)
+        dist, dist_keys = probe()
+        assert local == dist
+        assert local["__rows__"] == 102 and local["__dup__"] == 2
+        assert local_keys == dist_keys and len(local_keys) == 100
+
+    @staticmethod
+    def _twin_commits(spark, tmp_path, name, key):
+        """One merge and one CDC batch on a table keyed by ``key``:
+        ``(rows with k read back as its orderkey, [merge, cdc] stats)``."""
+        t = str(tmp_path / name)
+        o, k = TestLocalKeyProbe._table(spark, t, key)
+        upd = (o.filter(F.col("o_orderkey").between(100, 300)
+                        | F.col("o_orderkey").between(1200, 1300))
+               .withColumn("o_totalprice", F.lit(1.0)))
+        _, sm = V.merge_versioned(spark, t, upd.select(k, "o_totalprice"), "k")
+        cdc = (o.filter(F.col("o_orderkey").between(500, 560))
+               .withColumn("op", F.when(F.col("o_orderkey") % 3 == 0, "D")
+                           .otherwise("U"))
+               .unionByName(o.filter(F.col("o_orderkey").between(1400, 1450))
+                            .withColumn("op", F.lit("I"))))
+        _, sc = V.apply_cdc(spark, t, cdc.select(k, "o_totalprice", "op"),
+                            "k")
+        rows = sorted(
+            (int(r[0]) if not isinstance(r[0], str) else int(r[0][1:]), r[1])
+            for r in V.read_versioned(spark, t).collect())
+        return rows, [sm, sc]
+
+    def test_non_bitwise_or_oversized_keys_take_spark_probe(
+            self, spark, tmp_path, monkeypatch):
+        """Double keys, collated string keys and a key projection whose
+        estimate is over the broadcast threshold all keep the Spark
+        probe, and commit the same rows with the same stats as the local
+        probe on the twin bigint (or plain string) table."""
+        seen = []
+        fits = V._local_probe_fits
+        monkeypatch.setattr(V, "_local_probe_fits",
+                            lambda key_cols: seen.append(fits(key_cols))
+                            or seen[-1])
+
+        def run(name, key):
+            """The twin commits and the gate's answer for each."""
+            seen.clear()
+            return (*self._twin_commits(spark, tmp_path, name, key),
+                    list(seen))
+
+        def name(c):
+            return F.concat(F.lit("k"), F.lpad(c.cast("string"), 6, "0"))
+
+        base = run("lp_long", None)
+        plain = run("lp_str", name)
+        assert base[2] == plain[2] == [True, True]
+        as_double = run("lp_double", lambda c: c.cast("double"))
+        collated = run("lp_lcase",
+                       lambda c: name(c).cast("string collate UTF8_LCASE"))
+        real = V.estimated_bytes
+        monkeypatch.setattr(
+            V, "estimated_bytes",
+            lambda df: 1 << 62 if df.columns == ["k"] else real(df))
+        oversized = run("lp_big", None)
+        for twin, spark_route in ((base, as_double), (plain, collated),
+                                  (base, oversized)):
+            assert spark_route[2] == [False, False]
+            assert spark_route[:2] == twin[:2]
+
+    def test_small_keyed_commits_job_count(self, spark, tmp_path):
+        """A small merge and a small CDC batch touching one file of a
+        4-file table, counted by job group: the one-job probe plus
+        discovery and the rewrite, at most 6 jobs each (the per-key
+        rollup probe ran 10)."""
+        t = str(tmp_path / "lp_jobs")
+        o, k = self._table(spark, t)
+        upd = (o.filter(F.col("o_orderkey").between(100, 140))
+               .withColumn("o_totalprice", F.lit(1.0)).select(k, "o_totalprice"))
+        n, (_, st) = _jobs(spark, lambda: V.merge_versioned(spark, t, upd, "k"))
+        assert st["files_rewritten"] == 1 and n <= 6, n
+        cdc = upd.withColumn("op", F.lit("U"))
+        n, (_, st) = _jobs(spark, lambda: V.apply_cdc(spark, t, cdc, "k"))
+        assert st["files_rewritten"] == 1 and n <= 6, n

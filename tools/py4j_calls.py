@@ -15,7 +15,15 @@ repeated with the same literals compiles nothing; the ``fresh`` rows
 change a literal on every call and pay the compile each time.
 Read-only observability: it never changes what a call computes.
 
-Usage: python tools/py4j_calls.py [--rows N]
+A second section prints the same columns for keyed commits on a
+16-file versioned table of ``--rows`` rows: ``merge_versioned`` of a
+2 000-row upsert batch, ``apply_cdc`` of a 1 000-row I/U/D batch (both
+pandas-built, as perfbench's are, with fresh keys from a narrow window
+of the key space on every call) and a merge-on-read
+``delete_versioned`` whose ``k >= lo AND k < hi`` range is fresh on
+every call.
+
+Usage: python tools/py4j_calls.py [--rows N] [--only positional|keyed]
 """
 
 from __future__ import annotations
@@ -53,9 +61,51 @@ def _write_csv(path: str, n_rows: int, wide: bool) -> None:
                         f"{r},{r % 3},k{r % 7}\n")
 
 
+def _keyed_calls(spark, d: str, n_rows: int) -> dict:
+    """Keyed commits on a fresh 16-file ``(k, a, b)`` table: each call
+    draws new keys (or a new delete range) from a cursor that walks the
+    key space, so no call repeats its predecessor's batch."""
+    import pandas as pd
+
+    from lazy_frame_spark.sources import versioned as V
+
+    t = os.path.join(d, "keyed")
+    V.write_versioned(spark.range(n_rows).selectExpr(
+        "id * 2 AS k", "id % 97 AS a", "CAST(id AS DOUBLE) / 3 AS b")
+        .repartitionByRange(16, "k"), t)
+    rng = random.Random(11)
+    window = max(n_rows // 8, 4000)   # keys per cursor step
+    cursor = itertools.count()
+
+    def batch(n: int) -> pd.DataFrame:
+        lo = (next(cursor) * window) % (2 * n_rows - window)
+        ks = rng.sample(range(lo, lo + window), n)
+        return pd.DataFrame({"k": ks, "a": [rng.randint(0, 96) for _ in ks],
+                             "b": [rng.random() for _ in ks]})
+
+    def cdc() -> pd.DataFrame:
+        df = batch(1000)
+        df["op"] = ["U"] * 400 + ["D"] * 300 + ["I"] * 300
+        return df
+
+    def delete() -> None:
+        lo = (next(cursor) * window) % (2 * n_rows - window)
+        V.delete_versioned(spark, t, f"k >= {lo} AND k < {lo + 50}",
+                           strategy="merge-on-read")
+
+    return {
+        "merge_versioned(2000 rows)": lambda: V.merge_versioned(
+            spark, t, spark.createDataFrame(batch(2000)), on="k"),
+        "apply_cdc(1000 rows)": lambda: V.apply_cdc(
+            spark, t, spark.createDataFrame(cdc()), on="k", op_col="op"),
+        "delete_versioned(mor, fresh range)": delete,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--rows", type=int, default=20_000)
+    ap.add_argument("--only", choices=("positional", "keyed"))
     args = ap.parse_args()
 
     spark = get_spark("py4j_calls", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
@@ -93,10 +143,12 @@ def main() -> None:
         return (calls, total, len(sc.statusTracker().getJobIdsForGroup(group)),
                 compiled, compile_ms, ms)
 
-    with tempfile.TemporaryDirectory() as d:
-        print(f"{'frame':>6} {'call':34} {'py4j_c':>6} {'all':>5} "
+    header = (f"{'frame':>6} {'call':34} {'py4j_c':>6} {'all':>5} "
               f"{'jobs':>4} {'compiled':>8} {'comp_ms':>7} {'ms':>7}")
-        for wide in (False, True):
+    with tempfile.TemporaryDirectory() as d:
+        if args.only != "keyed":
+            print(header)
+        for wide in (False, True) if args.only != "keyed" else ():
             path = os.path.join(d, f"w{wide:d}.csv")
             _write_csv(path, args.rows, wide)
             lf = LazyFrame.open(spark, path)
@@ -123,6 +175,12 @@ def main() -> None:
                 print(f"{len(lf.columns):>4}col {name:34} {c:>6} {total:>5} "
                       f"{jobs:>4} {compiled:>8} {compile_ms:>7.1f} {ms:>7.1f}")
             lf.close()
+        if args.only != "positional":
+            print(header.replace(" frame", " table"))
+            for name, fn in _keyed_calls(spark, d, args.rows).items():
+                c, total, jobs, compiled, compile_ms, ms = measure(fn)
+                print(f"{'keyed':>7} {name:34} {c:>6} {total:>5} "
+                      f"{jobs:>4} {compiled:>8} {compile_ms:>7.1f} {ms:>7.1f}")
     client.send_command = send
     spark.stop()
 
